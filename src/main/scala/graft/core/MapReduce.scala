@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed MapReduce core — the parity surface of the reference engine.
@@ -22,6 +22,15 @@ import org.apache.spark.sql.expressions.Aggregator
   * [[runAggregated]] fast paths) combined map-side before any bytes move.
   * At 100 TB that map-side combine is the difference between shuffling
   * terabytes and shuffling the (tiny) key cardinality.
+  *
+  * The fast paths combine in the mapper ([[combineInMapper]]): each map
+  * partition folds its pairs per key in a hash map bounded at
+  * `1 << 16` keys (a full map flushes its partials and starts over), so
+  * the one typed shuffle moves about one row per distinct key per
+  * partition. Their reducers must be associative and commutative. On the
+  * map side keys compare by their JVM `equals`/`hashCode`, as
+  * `rdd.reduceByKey` does; Spark's grouping is the final merge and
+  * decides key equality for the result.
   *
   * Design notes vs. the reference, per SURVEY.md §2/§7:
   *  - task scheduling / heartbeats / code shipping / serialization
@@ -57,11 +66,14 @@ object MapReduce {
       .mapGroups((k, it) => (k, reduceFn(k, it.map(_._2))))
 
   /** Fast path for associative+commutative reducers (the common case —
-    * word count, sums, max/min). `reduceGroups` runs on a typed
-    * `Aggregator` under the hood, so Spark performs partial (map-side)
-    * aggregation before the shuffle — the single biggest perf delta vs.
-    * the reference, which ships whole value lists to reducers
-    * (`server.py:252-254`).
+    * word count, sums, max/min): the in-mapper combiner folds each map
+    * partition's pairs per key with `combine` (see [[combineInMapper]]),
+    * then `reduceGroups` merges the per-partition partials after the one
+    * shuffle — the single biggest perf delta vs. the reference, which
+    * ships whole value lists to reducers (`server.py:252-254`).
+    *
+    * Contract: `combine` is associative and commutative; the order in
+    * which values and partials meet is unspecified.
     */
   def runReduced[K1, V1, K2, V2](
       data: Dataset[(K1, V1)],
@@ -69,33 +81,93 @@ object MapReduce {
       combine: (V2, V2) => V2)(
       implicit e2: Encoder[(K2, V2)],
       ek: Encoder[K2]): Dataset[(K2, V2)] =
-    data
-      .flatMap { case (k, v) => mapFn(k, v) }
+    reduced(data, mapFn, combine, CombinerMaxKeys)
+
+  private[core] def reduced[K1, V1, K2, V2](
+      data: Dataset[(K1, V1)],
+      mapFn: (K1, V1) => IterableOnce[(K2, V2)],
+      combine: (V2, V2) => V2,
+      maxKeys: Int)(
+      implicit e2: Encoder[(K2, V2)],
+      ek: Encoder[K2]): Dataset[(K2, V2)] =
+    combineInMapper[K1, V1, K2, V2, V2](data, mapFn, identity, combine, maxKeys)
       .groupByKey(_._1)
       .reduceGroups((a, b) => (a._1, combine(a._2, b._2)))
       .map { case (k, (_, v)) => (k, v) }
 
-  /** Full monoid form: distinct value/buffer/output types with map-side
-    * combine via a typed `Aggregator` — the Spark-native shape of the
-    * reference's `reducefn` when the fold has an identity and a merge.
+  /** Full monoid form: distinct value/buffer/output types — the
+    * Spark-native shape of the reference's `reducefn` when the fold has
+    * an identity and a merge. The in-mapper combiner folds each map
+    * partition per key with `seqOp` from a fresh `zeroB`; a typed
+    * `Aggregator` merges the partials with `combOp` after the shuffle.
+    *
+    * Contract: `zeroB` is an identity of `combOp`, and `combOp` is
+    * associative and commutative. `zeroB` is evaluated afresh for every
+    * buffer, so `seqOp`/`combOp` may mutate and return their first
+    * argument (the `Aggregator` contract allows it).
     */
   def runAggregated[K1, V1, K2, V2, B, V3](
       data: Dataset[(K1, V1)],
       mapFn: (K1, V1) => IterableOnce[(K2, V2)],
-      zeroB: B,
+      zeroB: => B,
       seqOp: (B, V2) => B,
       combOp: (B, B) => B,
       finishB: B => V3)(
-      implicit e2: Encoder[(K2, V2)],
-      ek: Encoder[K2],
+      implicit ek: Encoder[K2],
       eb: Encoder[B],
-      ev3: Encoder[V3],
-      e3: Encoder[(K2, V3)]): Dataset[(K2, V3)] = {
-    val agg = new FoldAggregator[K2, V2, B, V3](zeroB, seqOp, combOp, finishB, eb, ev3)
-    data
-      .flatMap { case (k, v) => mapFn(k, v) }
+      ev3: Encoder[V3]): Dataset[(K2, V3)] =
+    aggregated(data, mapFn, () => zeroB, seqOp, combOp, finishB, CombinerMaxKeys)
+
+  private[core] def aggregated[K1, V1, K2, V2, B, V3](
+      data: Dataset[(K1, V1)],
+      mapFn: (K1, V1) => IterableOnce[(K2, V2)],
+      zeroB: () => B,
+      seqOp: (B, V2) => B,
+      combOp: (B, B) => B,
+      finishB: B => V3,
+      maxKeys: Int)(
+      implicit ek: Encoder[K2],
+      eb: Encoder[B],
+      ev3: Encoder[V3]): Dataset[(K2, V3)] = {
+    val agg = new MergeAggregator[K2, B, V3](zeroB, combOp, finishB, eb, ev3)
+    combineInMapper[K1, V1, K2, V2, B](
+        data, mapFn, v => seqOp(zeroB(), v), seqOp, maxKeys)(
+        Encoders.tuple(ek, eb))
       .groupByKey(_._1)
       .agg(agg.toColumn)
+  }
+
+  /** Distinct keys one in-mapper combining map holds before it flushes:
+    * bounds a task's combiner memory on a high-cardinality key space,
+    * where a flush loses little combining. */
+  private val CombinerMaxKeys = 1 << 16
+
+  /** In-mapper combining (Lin & Dyer, *Data-Intensive Text Processing
+    * with MapReduce*, 2010, §3.1): apply `mapFn` to each partition and
+    * fold its pairs per key in a `java.util.HashMap` — a key's first
+    * value through `init`, later ones through `fold` — emitting one
+    * `(key, partial)` row per key. A map that holds `maxKeys` keys is
+    * flushed when a new key arrives, so a partition may emit a key more
+    * than once; callers merge the partials after the shuffle anyway.
+    *
+    * Keys are compared by their JVM `equals`/`hashCode` here, as
+    * `rdd.reduceByKey` does: an `Array[Byte]` key or a `-0.0`/`0.0`
+    * pair stays split on the map side, and Spark's grouping in the final
+    * merge is what decides equality. Compared with serializing every
+    * mapped pair into Spark's partial aggregation, this skips a
+    * serialize/deserialize round trip per pair and the object hash
+    * aggregate's sort fallback past 128 keys. */
+  private[core] def combineInMapper[K1, V1, K2, V2, B](
+      data: Dataset[(K1, V1)],
+      mapFn: (K1, V1) => IterableOnce[(K2, V2)],
+      init: V2 => B,
+      fold: (B, V2) => B,
+      maxKeys: Int)(implicit ekb: Encoder[(K2, B)]): Dataset[(K2, B)] = {
+    require(maxKeys > 0, "maxKeys must be positive")
+    data.mapPartitions { rows =>
+      new InMapperCombiner[K2, V2, B](
+        rows.flatMap { case (k, v) => mapFn(k, v) }, init, fold, maxKeys)
+    }
   }
 
   /** Top-k by value, descending: the reference example's driver-side
@@ -118,8 +190,13 @@ object MapReduce {
     * it, deterministically). Values arrive sorted best-first. */
   def topKPerKey[K, V](ds: Dataset[(K, V)], k: Int)(
       implicit ord: Ordering[V],
-      ekv: Encoder[(K, V)], ek: Encoder[K], eb: Encoder[Seq[V]],
-      eo: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] = {
+      ek: Encoder[K], eb: Encoder[Seq[V]]): Dataset[(K, Seq[V])] =
+    topKPerKeyBounded(ds, k, CombinerMaxKeys)
+
+  private[core] def topKPerKeyBounded[K, V](ds: Dataset[(K, V)], k: Int,
+      maxKeys: Int)(
+      implicit ord: Ordering[V],
+      ek: Encoder[K], eb: Encoder[Seq[V]]): Dataset[(K, Seq[V])] = {
     require(k > 0, "k must be positive")
     // buffers are kept sorted best-first; the common case (a row worse
     // than the current kth) is rejected in O(1) — no re-sort per row
@@ -148,27 +225,60 @@ object MapReduce {
       }
       out.toSeq
     }
-    runAggregated[K, V, K, V, Seq[V], Seq[V]](
-      ds, (kk, v) => Seq((kk, v)),
-      Seq.empty[V],
+    aggregated[K, V, K, V, Seq[V], Seq[V]](
+      ds, (kk, v) => Iterator.single((kk, v)),
+      () => Seq.empty[V],
       insert,
       mergeSorted,
-      identity)
+      identity,
+      maxKeys)(ek, eb, eb)
   }
 }
 
-/** Aggregator backing [[MapReduce.runAggregated]]: a keyed monoid fold
-  * with map-side partial aggregation. */
-private[core] class FoldAggregator[K2, V2, B, V3](
-    zeroB: B,
-    seqOp: (B, V2) => B,
+/** The iterator behind [[MapReduce.combineInMapper]]: emits each map's
+  * `(key, partial)` entries once the map is full or `pairs` runs out. */
+private final class InMapperCombiner[K, V, B](
+    pairs: Iterator[(K, V)],
+    init: V => B,
+    fold: (B, V) => B,
+    maxKeys: Int)
+  extends Iterator[(K, B)] {
+  private val in = pairs.buffered
+  private var out: java.util.Iterator[java.util.Map.Entry[K, B]] =
+    java.util.Collections.emptyIterator()
+
+  override def hasNext: Boolean = out.hasNext || (in.hasNext && { fill(); true })
+
+  override def next(): (K, B) = {
+    if (!hasNext) throw new NoSuchElementException("combiner exhausted")
+    val e = out.next()
+    (e.getKey, e.getValue)
+  }
+
+  // a full map still absorbs pairs whose key it holds; a new key flushes
+  private def fill(): Unit = {
+    val m = new java.util.HashMap[K, B]()
+    while (in.hasNext && (m.size < maxKeys || m.containsKey(in.head._1))) {
+      val (k, v) = in.next()
+      val b = m.get(k)
+      m.put(k, if (b == null && !m.containsKey(k)) init(v) else fold(b, v))
+    }
+    out = m.entrySet.iterator
+  }
+}
+
+/** Aggregator backing [[MapReduce.runAggregated]]: merges the in-mapper
+  * combiner's `(key, partial)` rows with `combOp`, from a fresh `zeroB`
+  * per group. */
+private[core] class MergeAggregator[K2, B, V3](
+    zeroB: () => B,
     combOp: (B, B) => B,
     finishB: B => V3,
     eb: Encoder[B],
     ev3: Encoder[V3])
-  extends Aggregator[(K2, V2), B, V3] {
-  override def zero: B = zeroB
-  override def reduce(b: B, a: (K2, V2)): B = seqOp(b, a._2)
+  extends Aggregator[(K2, B), B, V3] {
+  override def zero: B = zeroB()
+  override def reduce(b: B, a: (K2, B)): B = combOp(b, a._2)
   override def merge(b1: B, b2: B): B = combOp(b1, b2)
   override def finish(b: B): V3 = finishB(b)
   override def bufferEncoder: Encoder[B] = eb

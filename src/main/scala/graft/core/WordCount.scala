@@ -13,9 +13,12 @@ object WordCount {
   def tokens(line: String): Array[String] =
     line.split("\\s+").filter(_.nonEmpty)
 
-  /** Counts via the MapReduce core's associative fast path (map-side
-    * combine, unlike the reference which ships every `(word, 1)` through
-    * the driver — `server.py:283-287`). */
+  /** Counts via the MapReduce core's associative fast path: each map
+    * partition sums its `(word, 1)` pairs per word in the in-mapper
+    * combiner (bounded at `1 << 16` words before it flushes), so the
+    * shuffle moves one row per distinct word per partition — unlike the
+    * reference, which ships every `(word, 1)` through the driver
+    * (`server.py:283-287`). */
   def counts(lines: Dataset[(Long, String)]): Dataset[(String, Long)] = {
     val spark = lines.sparkSession
     import spark.implicits._

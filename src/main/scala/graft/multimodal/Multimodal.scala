@@ -847,7 +847,7 @@ object Multimodal {
       .groupBy(col("a"), col("b"), col("offset"))
       .agg(count(lit(1)).as("votes"))
     // best offset per pair: votes desc, offset asc at ties. max_by over
-    // the unique (votes, -offset) order — SELECTION-IDENTICAL to the
+    // the unique (votes, ~offset) order — SELECTION-IDENTICAL to the
     // former row_number window (offset is unique per pair, so the order
     // key is total) but a hash aggregate instead of exchange+sort+rank:
     // the vote table here is pairs × offsets (6.9M rows at sf0.1,
@@ -868,7 +868,9 @@ object Multimodal {
     import org.apache.spark.sql.functions._
     votes.groupBy(pairCols.map(col): _*)
       .agg(max_by(struct(col("offset"), col("votes")),
-        struct(col("votes"), (-col("offset")).as("__negoff"))).as("__best"))
+        // ~offset = -offset - 1 reverses the order over all of Long;
+        // -offset overflows at Long.MinValue (ANSI throws, else wraps)
+        struct(col("votes"), bitwise_not(col("offset")).as("__notoff"))).as("__best"))
       .select(pairCols.map(col) ++
         Seq(col("__best.offset").as("offset"), col("__best.votes").as("votes")): _*)
   }

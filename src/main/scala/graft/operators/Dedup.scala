@@ -110,9 +110,10 @@ object Dedup {
     clusters.join(quality, Seq(idCol))
       .groupBy(col(clusterCol))
       .agg(
-        // max over (score, -id) == highest score, lowest id on ties
+        // max over (score, ~id) == highest score, lowest id on ties;
+        // ~id = -id - 1 cannot overflow where -id does (Long.MinValue)
         max_by(col(idCol),
-          struct(col(scoreCol), (-col(idCol)).as("__nid"))).as("keep_id"),
+          struct(col(scoreCol), bitwise_not(col(idCol)).as("__notid"))).as("keep_id"),
         max(col(scoreCol)).as("keep_score"),
         count(lit(1)).as("n_members"))
       .withColumn("n_dropped", col("n_members") - 1)

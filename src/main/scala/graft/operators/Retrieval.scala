@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,20 +32,39 @@ object Retrieval {
     * construct vs 0.14s execute). The legs share no state and are
     * individually deterministic, so results are identical to the
     * sequential build — this is the [[graft.sources.Sinks.writeBucketedAll]]
-    * concurrency pattern on the read side. Failures propagate (first
-    * exception rethrown, pool always torn down). */
+    * concurrency pattern on the read side. Each leg runs with the
+    * caller's active `SparkSession`. The first leg to fail cancels and
+    * interrupts the other, and its own exception is rethrown; the pool is
+    * always torn down. */
   private[graft] def buildLegs[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    import java.util.concurrent.{Callable, ExecutionException,
+      ExecutorCompletionService, Executors}
+    // leg threads build plans against the caller's session, not
+    // whatever session the pool thread happens to inherit
+    val session = SparkSession.getActiveSession
+    def leg(body: => Any): Callable[Any] = () => {
+      session.foreach(SparkSession.setActiveSession)
+      body
+    }
+    val pool = Executors.newFixedThreadPool(2)
+    val done = new ExecutorCompletionService[Any](pool)
+    val fa = done.submit(leg(a))
+    val fb = done.submit(leg(b))
     try {
-      val fa = pool.submit(new java.util.concurrent.Callable[A] {
-        override def call(): A = a
-      })
-      val fb = pool.submit(new java.util.concurrent.Callable[B] {
-        override def call(): B = b
-      })
-      (fa.get(), fb.get())
+      // wait in completion order, so the first failure is seen at once
+      done.take().get()
+      done.take().get()
+      (fa.get().asInstanceOf[A], fb.get().asInstanceOf[B])
     } catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
+      case e: Throwable =>
+        // a failed leg interrupts its sibling rather than waiting it out
+        fa.cancel(true)
+        fb.cancel(true)
+        pool.shutdownNow()
+        throw (e match {
+          case ee: ExecutionException if ee.getCause != null => ee.getCause
+          case other => other
+        })
     } finally pool.shutdown()
   }
 

@@ -108,6 +108,19 @@ class Round17bSpec extends SparkSpec {
       s"expected the two segment-key pins + the pair pin, got $pinned")
   }
 
+  test("audioFingerprintMatches: a Long.MinValue offset wins its vote " +
+      "tie (the tie-break key must not overflow)") {
+    import spark.implicits._
+    // pair (1,2): offset Long.MinValue and offset 5, one vote each
+    val fps = Seq(AudioFingerprint(1, Long.MinValue, 101),
+      AudioFingerprint(2, 0, 101), AudioFingerprint(1, 10, 102),
+      AudioFingerprint(2, 5, 102)).toDS()
+    val rows = Multimodal.audioFingerprintMatches(fps, minVotes = 1L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSet
+    assert(rows === Set((1L, 2L, Long.MinValue, 1L)))
+  }
+
   test("buildLegs: both legs run, results round-trip, and a failing " +
       "leg rethrows its own exception") {
     val ran = new java.util.concurrent.atomic.AtomicInteger
@@ -121,5 +134,35 @@ class Round17bSpec extends SparkSpec {
     }
     assert(boom.getMessage === "leg failed",
       "the leg's own exception must propagate, not ExecutionException")
+  }
+
+  test("buildLegs: a failing leg interrupts its slow sibling, and each " +
+      "leg runs with the caller's active session") {
+    val interrupted = new java.util.concurrent.CountDownLatch(1)
+    val t0 = System.nanoTime()
+    val boom = intercept[IllegalStateException] {
+      graft.operators.Retrieval.buildLegs(
+        try { Thread.sleep(60000L); "slow" }
+        catch { case e: InterruptedException => interrupted.countDown(); throw e },
+        { Thread.sleep(200L); throw new IllegalStateException("leg failed") })
+    }
+    assert(boom.getMessage === "leg failed")
+    assert(System.nanoTime() - t0 < 30L * 1000000000L,
+      "the failure must not wait for the slow leg")
+    assert(interrupted.await(10L, java.util.concurrent.TimeUnit.SECONDS),
+      "the slow sibling must be interrupted")
+
+    val caller = spark.newSession()
+    val before = org.apache.spark.sql.SparkSession.getActiveSession
+    org.apache.spark.sql.SparkSession.setActiveSession(caller)
+    try {
+      val (a, b) = graft.operators.Retrieval.buildLegs(
+        org.apache.spark.sql.SparkSession.active,
+        org.apache.spark.sql.SparkSession.active)
+      assert((a eq caller) && (b eq caller))
+    } finally before match {
+      case Some(s) => org.apache.spark.sql.SparkSession.setActiveSession(s)
+      case None => org.apache.spark.sql.SparkSession.clearActiveSession()
+    }
   }
 }

@@ -39,6 +39,56 @@ class MapReduceSpec extends SparkSpec {
     assert(got === Map("a" -> "n=1", "b" -> "n=3"))
   }
 
+  test("runAggregated: a seqOp that mutates its buffer gets a fresh zero " +
+      "per key") {
+    import scala.collection.mutable.ArrayBuffer
+    implicit val bufEnc: org.apache.spark.sql.Encoder[ArrayBuffer[Long]] =
+      org.apache.spark.sql.Encoders.kryo[ArrayBuffer[Long]]
+    // several keys per partition: a zero shared across keys would
+    // collect every key's values of the partition into one buffer
+    val rows = (0L until 40L).map(i => (i, s"k${i % 5}"))
+    val got = MapReduce.runAggregated[Long, String, String, Long,
+        ArrayBuffer[Long], Seq[Long]](
+      spark.createDataset(rows).repartition(2),
+      (i, k) => Seq((k, i)),
+      ArrayBuffer.empty[Long],
+      (b, v) => { b += v; b },
+      (x, y) => { x ++= y; x },
+      _.toSeq.sorted
+    ).collect().toMap
+    val want = rows.groupBy(_._2).map { case (k, vs) => k -> vs.map(_._1).sorted }
+    assert(got === want)
+  }
+
+  test("mr_wordcount / mr_top_words: one shuffle exchange, no round-robin, " +
+      "and the shuffle writes one row per distinct word per map partition") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = java.nio.file.Files.createTempDirectory("graft-mr4").toString
+    try {
+      spark.read.parquet(s"$sf0001/documents.parquet").repartition(4)
+        .write.parquet(s"$dir/documents.parquet")
+      val lines = graft.sources.Sources.table(spark, dir, "documents")
+        .select($"doc_id", $"text").as[(Long, String)]
+      assert(lines.rdd.getNumPartitions === 4)
+      val distinctPerPartition = lines.rdd.mapPartitions { it =>
+        Iterator.single(it.flatMap(t => WordCount.tokens(t._2)).toSet.size.toLong)
+      }.collect().sum
+      val helper = new AdaptiveSparkPlanHelper {}
+      for (q <- Seq("mr_wordcount", "mr_top_words")) {
+        val df = graft.SparkEntry.queries(q)(spark, dir)
+        df.collect() // runs this plan itself, so its exchange holds the metrics
+        val plan = df.queryExecution.executedPlan
+        val shuffles = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+        assert(shuffles.size === 1, s"$q: one shuffle exchange\n$plan")
+        assert(!plan.toString.toLowerCase.contains("roundrobin"), s"$q must not fan out")
+        assert(shuffles.head.metrics("shuffleRecordsWritten").value ===
+          distinctPerPartition, s"$q: the in-mapper combiner must emit one " +
+            "row per distinct word per partition")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("invariance: result independent of partition count and input order") {
     val base = Seq((0L, "a b c"), (1L, "b c"), (2L, "c c a"), (3L, "d"))
     val expected = wc(base, 1)

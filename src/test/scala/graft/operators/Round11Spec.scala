@@ -88,6 +88,19 @@ class Round11Spec extends SparkSpec {
       b.getAs[Long]("n_dropped") === 0L)
   }
 
+  test("keepBestPerCluster: a Long.MinValue id wins its score tie " +
+      "(the tie-break key must not overflow)") {
+    import spark.implicits._
+    val clusters = Seq((Long.MinValue, 1L), (7L, 1L), (Long.MaxValue, 1L))
+      .toDF("doc_id", "cluster_rep")
+    val quality = Seq((Long.MinValue, 3L), (7L, 3L), (Long.MaxValue, 3L))
+      .toDF("doc_id", "score")
+    val row = Dedup.keepBestPerCluster(clusters, quality,
+        "doc_id", "cluster_rep", "score").collect().head
+    assert(row.getAs[Long]("keep_id") === Long.MinValue)
+    assert(row.getAs[Long]("n_members") === 3L)
+  }
+
   // ---- ADPCM quality: the compressed-path gate ----
 
   test("q_adpcm_quality agrees with q_adpcm_roundtrip on sample counts " +
