@@ -1,103 +1,23 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import graft.functions.{CharEntropy, MinHashAgg, RollingHash, VectorDot}
 
-/** SparkSessionExtensions hook: injects graft's native expressions into
-  * the session's function registry at build time, so
-  * `spark.sql("SELECT rolling_hash(text) ...")` and
-  * `call_function("vector_dot", ...)` work in any session built with
+/** SparkSessionExtensions hook: injects every entry of
+  * [[graft.functions.GraftFunctions.table]] into the session's function
+  * registry at build time, so SQL text such as
+  * `spark.sql("SELECT rolling_hash(text) ...")` resolves in any session
+  * built with
   *
   * {{{
   * SparkSession.builder().withExtensions(new GraftExtensions)...
   * }}}
   *
-  * or `--conf spark.sql.extensions=graft.GraftExtensions` on a cluster —
-  * no per-session GraftFunctions.register call needed. (The operators
-  * still self-register defensively for sessions built without it.)
+  * or `--conf spark.sql.extensions=graft.GraftExtensions` on a cluster.
+  * Scala code needs neither this nor `GraftFunctions.register`: the
+  * GraftFunctions Column constructors build the expressions directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("rolling_hash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        RollingHash(exprs.head, RollingHash.DefaultBase, RollingHash.DefaultMod)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vector_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VectorDot].getName, "vector_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VectorDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_agg"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MinHashAgg].getName, "minhash_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.buildMinHashAgg(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("char_entropy"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.CharEntropy].getName, "char_entropy"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.CharEntropy(exprs.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_agg"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate",
-        "bloom_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.buildBloomAgg(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_contains"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain",
-        "bloom_contains"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.buildBloomContains(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_probe"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.BloomProbe].getName, "bloom_probe"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GraftFunctions.buildBloomProbe(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("nfc_normalize"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.NfcNormalize(exprs.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("winnow_fps"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.WinnowFpsExpr].getName, "winnow_fps"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.WinnowFps.build(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("kgram_hashes"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.KgramHashesExpr].getName, "kgram_hashes"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.WinnowFps.buildKgramHashes(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("count_in"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.CountInExpr].getName, "count_in"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.CountIn.build(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("pq_encode"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.PqEncodeExpr].getName, "pq_encode"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.PqOps.buildEncode(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("pq_adc_lut"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.PqAdcLutExpr].getName, "pq_adc_lut"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.PqOps.buildAdcLut(exprs)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.functions.GraftFunctions.table.foreach(ext.injectFunction)
 }

@@ -127,7 +127,6 @@ object ScaleProbe {
           .write.format("noop").mode("overwrite").save()
       }
       time(s"char_entropy_${n}x") {
-        functions.GraftFunctions.register(spark)
         docsN.select(col("doc_id"),
           operators.TextAnalysis.charEntropy(col("text")).as("h"))
           .write.format("noop").mode("overwrite").save()

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.graft.GraftExpectsInputTypes
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Best-fit-decreasing bin assignment over per-sequence token counts
@@ -81,9 +79,4 @@ object BfdBinIds {
       s"bfd_bin_ids(counts, capacity) takes 2 arguments, got ${exprs.length}")
     BfdBinIdsExpr(exprs.head, exprs(1))
   }
-
-  /** Column API via the function registry (the [[ChunkIds.apply]]
-    * bridge convention). */
-  def apply(counts: Column, capacity: Column): Column =
-    call_function("bfd_bin_ids", counts, capacity)
 }

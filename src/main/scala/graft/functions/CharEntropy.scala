@@ -80,10 +80,4 @@ object CharEntropy {
     }
     h
   }
-
-  /** Register `char_entropy(str)` for SQL/expr use on a session.
-    * Delegates to the once-per-session [[GraftFunctions.register]] —
-    * the same WARN-spam rationale as [[RollingHash.register]]. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftFunctions.register(spark)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.graft.GraftExpectsInputTypes
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Greedy capacity-reset chunk assignment over per-sentence token
@@ -82,10 +80,4 @@ object ChunkIds {
       s"chunk_ids(counts, maxTokens) takes 2 arguments, got ${exprs.length}")
     ChunkIdsExpr(exprs.head, exprs(1))
   }
-
-  /** Column API via the function registry (Column↔Expression bridges
-    * are private[sql] in Spark 4): requires GraftFunctions.register on
-    * the executing session. */
-  def apply(counts: Column, maxTokens: Column): Column =
-    call_function("chunk_ids", counts, maxTokens)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.graft.GraftExpectsInputTypes
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, typedlit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native product-quantization kernels: encode (vector → per-subspace
@@ -26,11 +24,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * codebook size, which also lifts the practical codebook ceiling to
   * the standard 256 entries/subspace of published PQ systems.
   *
-  * The codebooks travel to the builder as two foldable literals
-  * (code ids: array<array<int>>; centroids: array<array<array<double>>>)
-  * and are carried OUTSIDE the plan tree as a [[PqModel]] — the
-  * [[BloomProbe]] pattern: resolution-time extraction, no giant nested
-  * literal for every plan traversal to re-walk.
+  * The codebooks are carried OUTSIDE the plan tree as a [[PqModel]] —
+  * the [[BloomProbe]] pattern, no giant nested literal for every plan
+  * traversal to re-walk. The Column constructors build the model
+  * directly; SQL passes two foldable literals (code ids:
+  * array<array<int>>; centroids: array<array<array<double>>>) that the
+  * builders below extract at resolution time.
   *
   * Arithmetic parity (oracle + the previous composed form): slice
   * norms and dots are left-to-right folds; the per-entry distance is
@@ -39,31 +38,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   */
 object PqOps {
 
-  /** Column API: `pq_encode(vec)` under the model — (codes
-    * array<int>). Requires GraftFunctions.register on the session. */
-  def pqEncode(vec: Column, codebooks: Seq[Seq[(Int, Seq[Double])]]): Column = {
-    val (ids, cents) = modelLits(codebooks)
-    call_function("pq_encode", vec, ids, cents)
-  }
-
-  /** Column API: `pq_adc_lut(q)` — the classic ADC table for a query
-    * vector: `lut[s][code]` = clamped squared distance from the query's
-    * subspace-s slice to that code's centroid, indexed DENSELY by code
-    * value (Lloyd training can drop an emptied cluster, so code ids may
-    * be non-contiguous; vanished ids hold MaxValue, which encode can
-    * never emit). Scoring a pair then costs `subspaces` array lookups. */
-  def pqAdcLut(q: Column, codebooks: Seq[Seq[(Int, Seq[Double])]]): Column = {
-    val (ids, cents) = modelLits(codebooks)
-    call_function("pq_adc_lut", q, ids, cents)
-  }
-
-  private def modelLits(cbs: Seq[Seq[(Int, Seq[Double])]]): (Column, Column) = {
-    val sorted = cbs.map(_.sortBy(_._1))
-    (typedlit(sorted.map(_.map(_._1))), typedlit(sorted.map(_.map(_._2))))
-  }
-
-  /** Function-registry builders (GraftFunctions): extract the model
-    * from the two literals at build time. */
+  /** SQL builders ([[GraftFunctions.table]]): extract the model from
+    * the two literals at build time. The Column constructors are
+    * [[GraftFunctions.pqEncode]] and [[GraftFunctions.pqAdcLut]]. */
   def buildEncode(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
       s"pq_encode(vec, codeIds, centroids) takes 3 arguments, got ${exprs.length}")
@@ -157,22 +134,34 @@ object PqModel {
   def fromLiterals(codeIds: Expression, cents: Expression): PqModel =
     (codeIds, cents) match {
       case (Literal(ids: ArrayData, _), Literal(cs: ArrayData, _)) =>
-        val idArr = ids.toSeq[ArrayData](ArrayType(IntegerType))
-          .map(_.toIntArray()).toArray
-        val centArr = cs.toSeq[ArrayData](ArrayType(ArrayType(DoubleType)))
-          .map(_.toSeq[ArrayData](ArrayType(DoubleType))
-            .map(_.toDoubleArray()).toArray).toArray
-        require(idArr.nonEmpty && idArr.forall(_.nonEmpty),
-          "pq model needs at least one codebook entry per subspace")
-        require(idArr.indices.forall(s => idArr(s).length == centArr(s).length),
-          "code-id and centroid arrays disagree")
-        val subDim = centArr.head.head.length
-        require(centArr.forall(_.forall(_.length == subDim)),
-          "all centroids must share the subspace dimension")
-        new PqModel(idArr, centArr, subDim)
+        checked(
+          ids.toSeq[ArrayData](ArrayType(IntegerType)).map(_.toIntArray()).toArray,
+          cs.toSeq[ArrayData](ArrayType(ArrayType(DoubleType)))
+            .map(_.toSeq[ArrayData](ArrayType(DoubleType))
+              .map(_.toDoubleArray()).toArray).toArray)
       case other => throw new IllegalArgumentException(
         "pq_encode/pq_adc_lut codebook arguments must be literals, got " + other)
     }
+
+  /** Direct construction from (code id, centroid) codebooks, one per
+    * subspace; entries are put in ascending code order. */
+  def fromCodebooks(cbs: Seq[Seq[(Int, Seq[Double])]]): PqModel = {
+    val sorted = cbs.map(_.sortBy(_._1))
+    checked(sorted.map(_.map(_._1).toArray).toArray,
+      sorted.map(_.map(_._2.toArray).toArray).toArray)
+  }
+
+  private def checked(idArr: Array[Array[Int]],
+      centArr: Array[Array[Array[Double]]]): PqModel = {
+    require(idArr.nonEmpty && idArr.forall(_.nonEmpty),
+      "pq model needs at least one codebook entry per subspace")
+    require(idArr.indices.forall(s => idArr(s).length == centArr(s).length),
+      "code-id and centroid arrays disagree")
+    val subDim = centArr.head.head.length
+    require(centArr.forall(_.forall(_.length == subDim)),
+      "all centroids must share the subspace dimension")
+    new PqModel(idArr, centArr, subDim)
+  }
 }
 
 /** codes = per-subspace nearest-codebook entry of an `array<double>`
@@ -196,7 +185,7 @@ case class PqEncodeExpr(child: Expression, model: PqModel)
     copy(child = newChild)
 }
 
-/** The per-query ADC distance table (see [[PqOps.pqAdcLut]]). */
+/** The per-query ADC distance table (see [[GraftFunctions.pqAdcLut]]). */
 case class PqAdcLutExpr(child: Expression, model: PqModel)
     extends UnaryExpression with GraftExpectsInputTypes {
 

@@ -69,12 +69,4 @@ case class RollingHash(child: Expression, base: Int, mod: Long)
 object RollingHash {
   val DefaultBase = 31
   val DefaultMod = 1000000007L
-
-  /** Register `rolling_hash(str)` for SQL/expr use on a session.
-    * Delegates to the once-per-session [[GraftFunctions.register]] —
-    * a direct `createOrReplaceTempFunction` here would log a "function
-    * replaced" WARN on every repeat call (the bench tail spam the
-    * registry's weak-keyed session set exists to prevent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftFunctions.register(spark)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.graft.GraftExpectsInputTypes
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Fused dot product over two `array<double>` columns.
@@ -61,12 +59,4 @@ case class VectorDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VectorDot =
     copy(left = newLeft, right = newRight)
-}
-
-object VectorDot {
-  /** Column API via the function registry (Column↔Expression bridges are
-    * private[sql] in Spark 4): requires GraftFunctions.register on the
-    * executing session. Both sides must already be `array<double>`. */
-  def apply(a: Column, b: Column): Column =
-    call_function("vector_dot", a, b)
 }

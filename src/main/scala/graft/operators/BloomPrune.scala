@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the sketch build is a distributed partial+final
   * aggregation of the dim side (Spark's own `BloomFilterAggregate`,
-  * registered by [[graft.functions.GraftFunctions]]); only the final
+  * built by [[graft.functions.GraftFunctions.bloomAgg]]); only the final
   * ~`numBits/8`-byte bitmap returns to the driver and re-enters the
-  * plan as a literal — exactly how Spark's runtime filters move the
-  * sketch. The fact side is filtered at the scan (codegen'd
+  * plan inside the probe expression — the same round trip Spark's
+  * runtime filters make. The fact side is filtered at the scan (codegen'd
   * `might_contain` on `xxhash64(key)`, no shuffle), so the join's
   * shuffle moves only `|matching| + ε·|fact|` rows instead of |fact|.
   * The trailing exact semi-join removes the ε false positives —
@@ -35,9 +35,8 @@ object BloomPrune {
     * collected to the driver (one row, ~numBits/8 bytes). */
   def keyFilter(df: DataFrame, keyCol: String,
       expectedItems: Long, numBits: Long): Array[Byte] = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df.select(call_function("bloom_agg", xxhash64(col(keyCol)),
-        lit(expectedItems), lit(numBits)).as("bf"))
+    df.select(graft.functions.GraftFunctions.bloomAgg(xxhash64(col(keyCol)),
+        expectedItems, numBits).as("bf"))
       .head.getAs[Array[Byte]]("bf")
   }
 
@@ -57,18 +56,17 @@ object BloomPrune {
     val factType = fact.schema(factKey).dataType
     val dimKeys = dim.select(col(dimKey).cast(factType).as(factKey))
     val bf = keyFilter(dimKeys, factKey, expectedItems, numBits)
-    graft.functions.GraftFunctions.register(fact.sparkSession)
     // null sketch = empty dim side (the aggregate saw no rows): nothing
     // can match, so prune everything rather than probing a null sketch.
-    // bloom_probe (not might_contain): the sketch bytes are extracted
-    // from the literal at resolution time and carried OUTSIDE the plan
-    // tree — a multi-MB binary literal in the plan is catastrophically
-    // non-linear to process (see functions.BloomProbe), and at 100 TB
-    // the filter should be sized in the hundreds of MB.
+    // bloom_probe (not might_contain): the sketch is deserialized once
+    // and carried OUTSIDE the plan tree — a multi-MB binary literal in
+    // the plan is catastrophically non-linear to process (see
+    // functions.BloomProbe), and at 100 TB the filter should be sized
+    // in the hundreds of MB.
     val pruned =
       if (bf == null) fact.filter(lit(false))
       else fact.filter(
-        call_function("bloom_probe", xxhash64(col(factKey)), lit(bf)))
+        graft.functions.GraftFunctions.bloomProbe(xxhash64(col(factKey)), bf))
     pruned.join(dimKeys.distinct(), Seq(factKey), "left_semi")
   }
 }

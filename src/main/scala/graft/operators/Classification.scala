@@ -68,7 +68,7 @@ object Classification {
     * anchor/output rounding, the same budget [[Curation.dsirResample]]
     * documents for ln). */
   private def sigmoid(xaCol: Column, w: Seq[Double]): Column =
-    lit(1.0) / (lit(1.0) + exp(-graft.functions.VectorDot(xaCol, typedlit(w))))
+    lit(1.0) / (lit(1.0) + exp(-graft.functions.GraftFunctions.vectorDot(xaCol, typedlit(w))))
 
   /** Train binary logistic regression by `steps` full-batch GD updates
     * at learning rate `lr`, target `targetCol` (a boolean expression
@@ -100,7 +100,6 @@ object Classification {
       targetCol: Column, steps: Int, lr: Double): Seq[Double] = {
     require(steps > 0, "steps must be positive")
     require(lr > 0, "lr must be positive")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val prepped = df.select(col(idCol).as("id"),
         augmented(col(vecCol)).as("__xa"),
         when(targetCol, lit(1.0)).otherwise(lit(0.0)).as("__y"))
@@ -168,7 +167,6 @@ object Classification {
     require(steps > 0, "steps must be positive")
     require(lr > 0, "lr must be positive")
     require(classes.nonEmpty, "need at least one class")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val prepped = df.select(col(idCol).as("id"),
         augmented(col(vecCol)).as("__xa"), labelCol.as("__lbl"))
       .cache() // scanned `steps` times; unpersisted below
@@ -181,7 +179,7 @@ object Classification {
       var ws: Seq[Seq[Double]] = classes.map(_ => Seq.fill(dim)(0.0))
       for (_ <- 1 to steps) {
         val margins = ws.map(w =>
-          graft.functions.VectorDot(col("__xa"), typedlit(w)))
+          graft.functions.GraftFunctions.vectorDot(col("__xa"), typedlit(w)))
         // shared denominator folded in fixed class order — the oracle
         // mirrors the exact exp/add sequence
         val denom = margins.map(exp).reduce(_ + _)
@@ -231,9 +229,8 @@ object Classification {
       predCol: String = "pred"): DataFrame = {
     require(classes.size == ws.size && ws.forall(_.nonEmpty),
       "need one non-empty weight vector per class")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val xa = augmented(col(vecCol))
-    val margins = ws.map(w => graft.functions.VectorDot(xa, typedlit(w)))
+    val margins = ws.map(w => graft.functions.GraftFunctions.vectorDot(xa, typedlit(w)))
     // max-margin subtraction before exponentiation: a confident model
     // with margins beyond ~709 overflows exp() to Infinity and turns
     // every posterior into NaN; exp(m - max) keeps the largest term at
@@ -269,7 +266,6 @@ object Classification {
   def scoreLogReg(df: DataFrame, idCol: String, vecCol: String,
       weights: Seq[Double]): DataFrame = {
     require(weights.nonEmpty, "weights must be non-empty")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"),
       round(sigmoid(augmented(col(vecCol)), weights), 6).as("lr_score"))
   }
@@ -285,7 +281,6 @@ object Classification {
     if (w.isEmpty) // empty corpus: empty result, correct schema
       return df.select(col(idCol).as("id"), lit(0.0).as("y"),
         lit(0.0).as("lr_score"))
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"),
       when(targetCol, lit(1.0)).otherwise(lit(0.0)).as("y"),
       round(sigmoid(augmented(col(vecCol)), w), 6).as("lr_score"))

@@ -46,7 +46,7 @@ object Clustering {
     * identical expression. */
   private def sqDistAlg(xx: Column, e: Column, c: Seq[Double]): Column = {
     val cc = c.foldLeft(0.0)((acc, x) => acc + x * x)
-    greatest(xx - lit(2.0) * graft.functions.VectorDot(e, typedlit(c)) + lit(cc),
+    greatest(xx - lit(2.0) * graft.functions.GraftFunctions.vectorDot(e, typedlit(c)) + lit(cc),
       lit(0.0))
   }
 
@@ -71,7 +71,7 @@ object Clustering {
       idCol: String, vecCol: Column): DataFrame = {
     val prepped = df.select(col(idCol).as("vec_id"),
         vecCol.cast("array<double>").as("__e"))
-      .withColumn("__xx", graft.functions.VectorDot(col("__e"), col("__e")))
+      .withColumn("__xx", graft.functions.GraftFunctions.vectorDot(col("__e"), col("__e")))
     if (centroids.size <= LiteralArgminMax) {
       val scored = array(centroids.map { case (cid, c) =>
         struct(sqDistAlg(col("__xx"), col("__e"), c).as("d2"), lit(cid).as("cid"))
@@ -84,7 +84,7 @@ object Clustering {
         (cid, c, c.foldLeft(0.0)((acc, x) => acc + x * x))
       }.toDF("__cid", "__c", "__cc")
       val d2 = greatest(col("__xx") -
-        lit(2.0) * graft.functions.VectorDot(col("__e"), col("__c")) +
+        lit(2.0) * graft.functions.GraftFunctions.vectorDot(col("__e"), col("__c")) +
         col("__cc"), lit(0.0))
       // ties on (d2, cid) are impossible (cid unique), so the trailing
       // __e field is never compared — it just rides along, avoiding a
@@ -129,7 +129,7 @@ object Clustering {
         (cid, c, c.foldLeft(0.0)((acc, x) => acc + x * x))
       }.toDF("__cid", "__c", "__cc")
       val d2 = greatest(col("__xx") -
-        lit(2.0) * graft.functions.VectorDot(col("e"), col("__c")) +
+        lit(2.0) * graft.functions.GraftFunctions.vectorDot(col("e"), col("__c")) +
         col("__cc"), lit(0.0))
       // cand_id is unique, so the trailing e field never decides the
       // min — it rides along to spare a second join back to the vector
@@ -158,7 +158,6 @@ object Clustering {
   def assign(df: DataFrame, centroids: Seq[(Int, Seq[Double])],
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(centroids.nonEmpty, "assign needs at least one centroid")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     if (df.isStreaming && centroids.size > LiteralArgminMax)
       return assignByClosure(df, centroids, idCol, vecCol)
     // streaming id convention: vec_id is LONG on both streaming paths
@@ -226,7 +225,6 @@ object Clustering {
   def trainCentroids(emb: DataFrame, k: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): Seq[(Int, Seq[Double])] = {
     require(k > 0 && iters > 0, "k and iters must be positive")
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val df = emb.select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("e"))
       .cache() // scanned iters times; unpersisted below
@@ -304,10 +302,9 @@ object Clustering {
       vecCol: String = "embedding"): DataFrame = {
     require(k > 0 && rounds > 0)
     val l = if (oversample > 0) oversample else 2 * k
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val df = emb.select(col(idCol).cast("long").as("vec_id"),
         col(vecCol).cast("array<double>").as("e"))
-      .withColumn("__xx", graft.functions.VectorDot(col("e"), col("e")))
+      .withColumn("__xx", graft.functions.GraftFunctions.vectorDot(col("e"), col("e")))
       .cache() // scanned rounds+1 times; unpersisted below
     try {
       var cands: Seq[(Long, Seq[Double])] =

@@ -247,7 +247,6 @@ object Curation {
       centroids: Seq[(Int, Seq[Double])], threshold: Double,
       maxCellRows: Long = 100000L): DataFrame = {
     val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     if (centroids.isEmpty) {
       import spark.implicits._
       return Seq.empty[(Long, Int, Int)].toDF("vec_id", "cell", "sel_rank")
@@ -275,7 +274,7 @@ object Curation {
         aggregate(col("__ms"), expr(s"cast(array() as $selType)"),
           (acc, x) => when(
             forall(acc, s =>
-              graft.functions.VectorDot(s.getField("emb_d"),
+              graft.functions.GraftFunctions.vectorDot(s.getField("emb_d"),
                 x.getField("emb_d")) /
                 (s.getField("nrm") * x.getField("nrm")) < threshold),
             concat(acc, array(x))).otherwise(acc)).as("__sel"))
@@ -314,7 +313,6 @@ object Curation {
       corpusEmb: DataFrame, centroids: Seq[(Int, Seq[Double])],
       threshold: Double, maxCellRows: Long = 100000L): DataFrame = {
     val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     if (centroids.isEmpty) {
       import spark.implicits._
       return Seq.empty[(Long, Int, Int)].toDF("vec_id", "cell", "sel_rank")
@@ -369,7 +367,7 @@ object Curation {
         aggregate(col("__ms"), col("__init"),
           (acc, x) => when(
             forall(acc, s =>
-              graft.functions.VectorDot(s.getField("emb_d"),
+              graft.functions.GraftFunctions.vectorDot(s.getField("emb_d"),
                 x.getField("emb_d")) /
                 (s.getField("nrm") * x.getField("nrm")) < threshold),
             concat(acc, array(x))).otherwise(acc)))

@@ -495,7 +495,6 @@ object Dedup {
     require(minLen >= 2, s"minLen must be >= 2 codepoints: $minLen")
     require(minOccurrences >= 2L,
       "minOccurrences must be >= 2: every gram occurs at least once")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // fan-out KEPT here after a round-17 healthy-window A/B: the kgram
     // posexplode emits ~len rows per doc and the fanned form measured
     // 25% faster at 32 cores (2.58s vs 3.23s, anchors flat) — unlike
@@ -508,7 +507,7 @@ object Dedup {
           "\\s+", " ")).as("__s"))
     val hs = norm
       .select(col("id"),
-        posexplode(call_function("kgram_hashes", col("__s"), lit(minLen))))
+        posexplode(graft.functions.GraftFunctions.kgramHashes(col("__s"), minLen)))
       .select(col("id"), (col("pos") + 1).as("gpos"), col("col").as("h"))
     val freq = hs.groupBy(col("h"))
       .agg(count(lit(1)).as("__occ"))
@@ -534,12 +533,11 @@ object Dedup {
     * distinct aggregation; 8 bytes per distinct gram. */
   def charGramIndex(df: DataFrame, idCol: String, textCol: String,
       minLen: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(textCol).as("__raw"))
       .select(
-        explode(call_function("kgram_hashes",
+        explode(graft.functions.GraftFunctions.kgramHashes(
           trim(regexp_replace(lower(coalesce(col("__raw"), lit(""))),
-            "\\s+", " ")), lit(minLen))).as("h"))
+            "\\s+", " ")), minLen)).as("h"))
       .distinct()
   }
 
@@ -559,14 +557,13 @@ object Dedup {
   def duplicateCharSpansAgainst(batch: DataFrame, corpusIndex: DataFrame,
       idCol: String, textCol: String, minLen: Int): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2 codepoints: $minLen")
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     val norm = batch.select(col(idCol).as("id"), col(textCol).as("__raw"))
       .select(col("id"),
         trim(regexp_replace(lower(coalesce(col("__raw"), lit(""))),
           "\\s+", " ")).as("__s"))
     val hs = norm
       .select(col("id"),
-        posexplode(call_function("kgram_hashes", col("__s"), lit(minLen))))
+        posexplode(graft.functions.GraftFunctions.kgramHashes(col("__s"), minLen)))
       .select(col("id"), (col("pos") + 1).as("gpos"), col("col").as("h"))
     val runs = spansFromGramStarts(
       hs.join(corpusIndex.select(col("h")), Seq("h"), "left_semi")
@@ -770,9 +767,8 @@ object Dedup {
     require(threshold > 0.0, "bloom pruning requires threshold > 0")
     val bf = BloomPrune.keyFilter(lsh, "shingle", expectedItems, numBits)
     if (bf == null) return crossJaccardPairsFromShingles(lsh, rsh.limit(0), threshold)
-    graft.functions.GraftFunctions.register(rsh.sparkSession)
     val candidateIds = rsh
-      .filter(call_function("bloom_probe", xxhash64(col("shingle")), lit(bf)))
+      .filter(graft.functions.GraftFunctions.bloomProbe(xxhash64(col("shingle")), bf))
       .select("id").distinct()
     crossJaccardPairsFromShingles(lsh, rsh.join(candidateIds, "id"), threshold)
   }
@@ -1009,9 +1005,8 @@ object Dedup {
     * composed k-column min() form evaluates k full hash expressions per
     * row and falls out of whole-stage codegen at k=128). */
   def minHashSignatures(sh: DataFrame, numHashes: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(sh.sparkSession)
     sh.groupBy("id")
-      .agg(call_function("minhash_agg", col("shingle"), lit(numHashes)).as("sig"))
+      .agg(graft.functions.GraftFunctions.minHashAgg(col("shingle"), numHashes).as("sig"))
   }
 
   /** Explode a signature table (id, sig) into its LSH band index
@@ -1148,7 +1143,6 @@ object Dedup {
   def semanticPairs(emb: DataFrame, threshold: Double, nClusters: Int = 8,
       trainIters: Int = 2, maxCellPairs: Long = 100000000L): DataFrame = {
     val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val centroids = Clustering.trainCentroids(emb, nClusters, trainIters)
     if (centroids.isEmpty) {
       import spark.implicits._
@@ -1209,7 +1203,6 @@ object Dedup {
   def semanticCrossPairs(batch: DataFrame, corpus: DataFrame,
       centroids: Seq[(Int, Seq[Double])], threshold: Double): DataFrame = {
     val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     if (centroids.isEmpty) {
       import spark.implicits._
       return Seq.empty[(Long, Long, Double)].toDF("batch_id", "corpus_id", "cos")

@@ -335,7 +335,7 @@ object Retrieval {
     val w = Classification.trainLogReg(labeled, "query_id", "__feat",
       col("__hit") === 1, steps, lr)
     val xa = concat(array(lit(1.0)), col("__feat"))
-    val margin = graft.functions.VectorDot(xa, typedlit(w))
+    val margin = graft.functions.GraftFunctions.vectorDot(xa, typedlit(w))
     val win = Window.partitionBy(col("query_id"))
       .orderBy(desc("__m"), asc("neighbor_id"))
     labeled

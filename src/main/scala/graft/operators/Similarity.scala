@@ -63,7 +63,7 @@ object Similarity {
     * array — see its scaladoc for why the composed
     * aggregate∘zip_with form loses at O(n²) pair counts). */
   def dot(a: Column, b: Column): Column =
-    graft.functions.VectorDot(a.cast("array<double>"), b.cast("array<double>"))
+    graft.functions.GraftFunctions.vectorDot(a.cast("array<double>"), b.cast("array<double>"))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -80,7 +80,6 @@ object Similarity {
   def bruteForceTopK(emb: DataFrame, k: Int, every: Long = 50L,
       maxRows: Long = DefaultBruteForceMaxRows): DataFrame = {
     guardSize(emb, maxRows, "bruteForceTopK", "ivfTopK")
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     // norms and double-casts precomputed per VECTOR (n of them), not per
     // scored pair (n·q of them) — same arithmetic, 3x fewer array folds
     val prepped = emb.select(col("vec_id"),
@@ -108,7 +107,6 @@ object Similarity {
   def exactNeardupPairs(emb: DataFrame, threshold: Double,
       maxRows: Long = DefaultBruteForceMaxRows): DataFrame = {
     guardSize(emb, maxRows, "exactNeardupPairs", "srpNeardupPairs")
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val prepped = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("emb_d"))
       .withColumn("nrm", sqrt(dot(col("emb_d"), col("emb_d"))))
@@ -149,7 +147,6 @@ object Similarity {
     * admit a pair on one side only. */
   def srpNeardupPairs(emb: DataFrame, dim: Int, threshold: Double,
       nBits: Int = 32, bands: Int = 8, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val prepped = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("emb_d"))
       .withColumn("nrm", sqrt(dot(col("emb_d"), col("emb_d"))))
@@ -193,7 +190,6 @@ object Similarity {
     * p = 1 − acos(s)/π). */
   def srpBandedSignatures(emb: DataFrame, dim: Int, nBits: Int = 32,
       bands: Int = 8, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     require(nBits % bands == 0)
     val r = nBits / bands
     val sigged = emb.select(col("vec_id"),
@@ -218,7 +214,6 @@ object Similarity {
   def srpNeardupCrossPairs(batch: DataFrame, corpusBanded: DataFrame,
       corpus: DataFrame, dim: Int, threshold: Double, nBits: Int = 32,
       bands: Int = 8, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     val bb = srpBandedSignatures(batch, dim, nBits, bands, seed)
     val cands = bb.select(col("vec_id").as("batch_id"), col("band"), col("band_key"))
       .join(corpusBanded.select(col("vec_id").as("corpus_id"), col("band"),
@@ -318,7 +313,6 @@ object Similarity {
       excludeSameId: Boolean = false,
       maxQueryRows: Long = DefaultKnnQueryBatchMaxRows): DataFrame = {
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     if (centroids.isEmpty) {
       // empty corpus: no cells — return an empty, correctly-typed result
       import spark.implicits._
@@ -349,7 +343,7 @@ object Similarity {
         val all = array(centroids.map { case (i, c) =>
           val cc = c.foldLeft(0.0)((acc, x) => acc + x * x)
           struct(greatest(col("__xx") - lit(2.0) *
-              graft.functions.VectorDot(col("emb_d"), typedLit(c)) + lit(cc),
+              graft.functions.GraftFunctions.vectorDot(col("emb_d"), typedLit(c)) + lit(cc),
             lit(0.0)).as("d"), lit(i).as("cell"))
         }: _*)
         df.withColumn("__cells", slice(array_sort(all), 1, m))
@@ -359,7 +353,7 @@ object Similarity {
           (i, c, c.foldLeft(0.0)((acc, x) => acc + x * x))
         }.toDF("__cid", "__c", "__cc")
         val d2 = greatest(col("__xx") -
-          lit(2.0) * graft.functions.VectorDot(col("emb_d"), col("__c")) +
+          lit(2.0) * graft.functions.GraftFunctions.vectorDot(col("emb_d"), col("__c")) +
           col("__cc"), lit(0.0))
         // ties on (d, cell) are impossible (cell ids unique), so the
         // trailing vector/norm fields are never compared — they ride
@@ -377,7 +371,7 @@ object Similarity {
       }
     def prep(df: DataFrame): DataFrame = df.select(col("vec_id"),
       col("embedding").cast("array<double>").as("emb_d"))
-      .withColumn("__xx", graft.functions.VectorDot(col("emb_d"), col("emb_d")))
+      .withColumn("__xx", graft.functions.GraftFunctions.vectorDot(col("emb_d"), col("emb_d")))
       .withColumn("nrm", sqrt(dot(col("emb_d"), col("emb_d"))))
     // prep AFTER any caller-side filter so predicates (on any metadata
     // column) are still resolvable and reach the scan
@@ -506,13 +500,12 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "pqEncode needs non-empty codebooks (empty corpus trains none)")
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     emb.select(col(idCol).as("vec_id"),
       pqCodesCol(col(vecCol).cast("array<double>"), codebooks, dim).as("codes"))
   }
 
   /** The codes projection itself — the native
-    * [[graft.functions.PqOps.pqEncode]] kernel: per subspace an argmin
+    * [[graft.functions.GraftFunctions.pqEncode]] kernel: per subspace an argmin
     * on the algebraic squared distance (ties toward the lower code, the
     * k-means criterion and the oracle's row_number order). A composed
     * literal-argmin column would unroll subspaces×codes dot products
@@ -522,7 +515,7 @@ object Similarity {
     * [[pqEncode]] and [[pqEncodeWithCells]]. */
   private def pqCodesCol(e: Column,
       codebooks: Seq[Seq[(Int, Seq[Double])]], dim: Int): Column =
-    graft.functions.PqOps.pqEncode(e, codebooks)
+    graft.functions.GraftFunctions.pqEncode(e, codebooks)
 
   /** ADC (asymmetric distance computation) top-k over an ENCODED
     * corpus: queries keep exact vectors; each (query, code-row) pair
@@ -538,7 +531,6 @@ object Similarity {
     * order so the oracle's replay is bit-identical. */
   def pqAdcTopK(codes: DataFrame, queries: DataFrame,
       codebooks: Seq[Seq[(Int, Seq[Double])]], dim: Int, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(codes.sparkSession)
     val qPrepped = adcPrepQueries(
       queries.select(col("query_id"), col("q")), codebooks, dim)
     val scored = codes.crossJoin(broadcast(qPrepped))
@@ -565,7 +557,7 @@ object Similarity {
   private def adcPrepQueries(queries: DataFrame,
       codebooks: Seq[Seq[(Int, Seq[Double])]], dim: Int): DataFrame =
     queries.withColumn("__lut",
-      graft.functions.PqOps.pqAdcLut(col("q").cast("array<double>"), codebooks))
+      graft.functions.GraftFunctions.pqAdcLut(col("q").cast("array<double>"), codebooks))
       .drop("q")
 
   /** The per-pair ADC distance over a `codes` column and the
@@ -630,7 +622,6 @@ object Similarity {
     require(coarse.nonEmpty, "pqEncodeWithCells needs coarse centroids")
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "pqEncodeWithCells needs non-empty codebooks")
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     if (coarse.size <= Clustering.LiteralArgminMax)
       pqEncodeCellsLiteral(emb, codebooks, coarse, dim, idCol, vecCol)
     else pqEncodeCellsJoin(emb, codebooks, coarse, dim, idCol, vecCol)
@@ -643,11 +634,11 @@ object Similarity {
       coarse: Seq[(Int, Seq[Double])], dim: Int, idCol: String,
       vecCol: String): DataFrame = {
     val e = col(vecCol).cast("array<double>")
-    val xx = graft.functions.VectorDot(e, e)
+    val xx = graft.functions.GraftFunctions.vectorDot(e, e)
     val cellCol = array_min(array(coarse.map { case (cid, c) =>
       val cc = c.foldLeft(0.0)((a, x) => a + x * x)
       struct(greatest(xx - lit(2.0) *
-          graft.functions.VectorDot(e, typedLit(c)) + lit(cc),
+          graft.functions.GraftFunctions.vectorDot(e, typedLit(c)) + lit(cc),
         lit(0.0)).as("d2"), lit(cid).as("cell"))
     }: _*)).getField("cell")
     emb.select(col(idCol).as("vec_id"), cellCol.as("cell"),
@@ -681,8 +672,6 @@ object Similarity {
       codebooks: Seq[Seq[(Int, Seq[Double])]],
       coarse: Seq[(Int, Seq[Double])], dim: Int, k: Int,
       nprobe: Int): DataFrame = {
-    val spark = codes.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     require(coarse.nonEmpty, "pqAdcTopKCells needs coarse centroids")
     // nprobe nearest cells per query — literal argsort below the
     // codegen cap, broadcast-join + bounded sorted-prefix above it
@@ -713,12 +702,12 @@ object Similarity {
     val spark = queries.sparkSession
     val q0 = queries.select(col("query_id"),
         col("q").cast("array<double>").as("q"))
-      .withColumn("__xx", graft.functions.VectorDot(col("q"), col("q")))
+      .withColumn("__xx", graft.functions.GraftFunctions.vectorDot(col("q"), col("q")))
     if (literal) {
       val all = array(coarse.map { case (cid, c) =>
         val cc = c.foldLeft(0.0)((a, x) => a + x * x)
         struct(greatest(col("__xx") - lit(2.0) *
-            graft.functions.VectorDot(col("q"), typedLit(c)) + lit(cc),
+            graft.functions.GraftFunctions.vectorDot(col("q"), typedLit(c)) + lit(cc),
           lit(0.0)).as("d"), lit(cid).as("cell"))
       }: _*)
       q0.withColumn("cell", explode(transform(
@@ -730,7 +719,7 @@ object Similarity {
         (i, c, c.foldLeft(0.0)((acc, x) => acc + x * x))
       }.toDF("__cid", "__c", "__cc")
       val d2 = greatest(col("__xx") - lit(2.0) *
-        graft.functions.VectorDot(col("q"), col("__c")) + col("__cc"),
+        graft.functions.GraftFunctions.vectorDot(col("q"), col("__c")) + col("__cc"),
         lit(0.0))
       // ties on (d, cell) impossible (cell ids unique), so the
       // trailing q field is never compared — it rides along to avoid

@@ -51,10 +51,7 @@ object TextAnalysis {
     * (`UTF8String.toLowerCase` — the identical lowering `lower` does). */
   private def countIn(toks: Column, words: Seq[String],
       lowercase: Boolean = false): Column =
-    org.apache.spark.sql.graft.GraftColumns.column(
-      graft.functions.CountInExpr(
-        org.apache.spark.sql.graft.GraftColumns.expression(toks),
-        words, lowercase))
+    graft.functions.GraftFunctions.countIn(toks, words, lowercase)
 
   /** Quality features: char/token counts, mean token length, stopword
     * ratio, alphanumeric ratio. NULL-free doubles rounded to 6 so the
@@ -127,10 +124,10 @@ object TextAnalysis {
   def charNgramHashFeatures(df: DataFrame, idCol: String, textCol: String,
       n: Int = 2, dim: Int = 32, carry: Seq[String] = Nil): DataFrame = {
     require(n > 0 && dim > 0, "need n > 0 and dim > 0")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select((col(idCol).as("id") +: carry.map(col)) :+
         lower(coalesce(col(textCol), lit(""))).as("__t"): _*)
-      .withColumn("features", expr(s"char_ngram_features(__t, $n, $dim)"))
+      .withColumn("features",
+        graft.functions.GraftFunctions.charNgramFeatures(col("__t"), n, dim))
       .drop("__t")
   }
 
@@ -169,7 +166,7 @@ object TextAnalysis {
         col(langCol) === l, steps, lr)
     }
     val scored = models.foldLeft(feats) { case (acc, (l, w)) =>
-      acc.withColumn(s"__m_$l", graft.functions.VectorDot(
+      acc.withColumn(s"__m_$l", graft.functions.GraftFunctions.vectorDot(
           concat(array(lit(1.0)), col("features")), typedlit(w)))
         .withColumn(s"s_$l",
           round(lit(1.0) / (lit(1.0) + exp(-col(s"__m_$l"))), 6))
@@ -236,11 +233,10 @@ object TextAnalysis {
     * gibberish/boilerplate signal (low entropy = repeated chars or
     * padding, high = random noise). Native Catalyst expression
     * ([[graft.functions.CharEntropy]]): one linear codegen'd pass per
-    * row, no explode, no shuffle. Returns 0.0 for empty text. Callers
-    * get registration for free via every entry point's
-    * `GraftFunctions.register`. */
+    * row, no explode, no shuffle. Returns 0.0 for empty text. Built
+    * directly, so it works in any session. */
   def charEntropy(c: Column): Column =
-    call_function("char_entropy", c)
+    graft.functions.GraftFunctions.charEntropy(c)
 
   /** Per-document deflate compression ratio (compressed/raw bytes) —
     * the classic repetition/boilerplate quality signal (cf. Gopher's
@@ -315,10 +311,8 @@ object TextAnalysis {
 
   /** Rolling-hash fingerprint via the native [[graft.functions.RollingHash]]
     * Catalyst expression (codegen'd). */
-  def rollingHashFingerprint(df: DataFrame, textCol: String): Column = {
-    graft.functions.RollingHash.register(df.sparkSession)
-    expr(s"rolling_hash($textCol)")
-  }
+  def rollingHashFingerprint(text: Column): Column =
+    graft.functions.GraftFunctions.rollingHash(text)
 
   /** Winnowing fingerprints (Schleimer et al., SIGMOD '03 — the MOSS
     * algorithm): hash every char `k`-gram of the whitespace-normalized
@@ -378,7 +372,6 @@ object TextAnalysis {
     * remains as the cross-validation reference. */
   def winnowFingerprintsFast(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, window: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // tiny single-split inputs fan out so the rolling-hash scan — the
     // dominant cost of every winnow path — runs at cluster parallelism
     // (Parallelism scaladoc; a no-op at production input sizes)
@@ -389,7 +382,7 @@ object TextAnalysis {
           .as("__s"))
       .filter(length(col("__s")) >= k + window - 1)
       .select(col("id"),
-        expr(s"winnow_fps(__s, $k, $window)").as("fps"))
+        graft.functions.GraftFunctions.winnowFps(col("__s"), k, window).as("fps"))
   }
 
   /** Term frequencies per (id, term): one explode + count. No read-side
@@ -767,7 +760,6 @@ object TextAnalysis {
       groupCol: String, capacity: Long, shards: Int = 1): DataFrame = {
     require(capacity > 0, s"capacity must be positive, got $capacity")
     require(shards >= 1, s"shards must be >= 1, got $shards")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("__id"), col(groupCol).as("__grp"),
         tokenCount(col(textCol)).cast("long").as("__n"),
         (graft.operators.Sampling.hashBucket256(col(idCol)) % shards)
@@ -777,7 +769,7 @@ object TextAnalysis {
       // (n desc, id asc) — the BFD "decreasing" order
       .agg(sort_array(collect_list(struct((-col("__n")).as("nn"),
         col("__id").as("id"), col("__n").as("n")))).as("__ds"))
-      .withColumn("__bins", graft.functions.BfdBinIds(
+      .withColumn("__bins", graft.functions.GraftFunctions.bfdBinIds(
         expr("transform(__ds, x -> x.n)"), lit(capacity)))
       .select(col("__grp"), col("shard"),
         explode(arrays_zip(col("__ds"), col("__bins"))).as("__z"))
@@ -864,7 +856,6 @@ object TextAnalysis {
   def chunkBySentences(df: DataFrame, idCol: String, textCol: String,
       maxTokens: Int): DataFrame = {
     require(maxTokens > 0, "need maxTokens > 0")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val marked = regexp_replace(col(textCol), "([.!?])\\s+", "$1\u0001")
     df.select(col(idCol).as("doc_id"), split(marked, "\u0001").as("__sents"))
       .withColumn("__zs", expr(
@@ -874,8 +865,8 @@ object TextAnalysis {
           " x -> x.n > 0)"))
       // pass 1: greedy capacity-reset fold over token counts only —
       // each sentence gets its 0-based chunk id (no string copying)
-      .withColumn("__ids", expr(
-        s"chunk_ids(transform(__zs, x -> x.n), ${maxTokens}L)"))
+      .withColumn("__ids", graft.functions.GraftFunctions.chunkIds(
+        expr("transform(__zs, x -> x.n)"), lit(maxTokens.toLong)))
       // pass 2: boundary starts (1-based positions where the id
       // changes); transform's index IS the chunk id, each chunk's
       // sentences sliced + joined exactly once
@@ -1070,10 +1061,10 @@ object TextAnalysis {
     * Appends `text_norm`. Pure projection — no shuffle, no UDF, scales
     * as the scan. */
   def normalizeText(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("text_norm",
       trim(regexp_replace(
-        lower(call_function("nfc_normalize", col(textCol))), "\\s+", " ")))
+        lower(graft.functions.GraftFunctions.nfcNormalize(col(textCol))),
+        "\\s+", " ")))
   }
 
   /** URL canonicalization + registered-domain extraction — the

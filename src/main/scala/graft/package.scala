@@ -12,8 +12,11 @@
   *    incremental
   *  - [[graft.sources.Sources]] / [[graft.sources.Sinks]] — layout-aware
   *    IO
-  *  - [[graft.GraftExtensions]] — SparkSessionExtensions hook for the
-  *    native SQL functions (`rolling_hash`, `vector_dot`)
+  *  - [[graft.functions.GraftFunctions]] — the native Catalyst
+  *    expressions as Column constructors, plus the one table of their
+  *    16 SQL names
+  *  - [[graft.GraftExtensions]] — SparkSessionExtensions hook that
+  *    injects that table for SQL use
   *  - [[graft.SparkEntry]] — the driver/verification contract: every
   *    operator as a named query with a DuckDB oracle
   *

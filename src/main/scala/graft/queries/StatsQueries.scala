@@ -80,7 +80,6 @@ object StatsQueries {
 
     // character-entropy quality signal over documents
     "q_char_entropy" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       table(s, dir, "documents")
         .filter(length(col("text")) > 0)
         .select(col("doc_id"),

@@ -244,7 +244,7 @@ object TextQueries {
       df.select(
         col("doc_id"),
         TextAnalysis.md5Fingerprint(col("text")).as("fp_md5"),
-        TextAnalysis.rollingHashFingerprint(df, "text").as("fp_roll"))
+        TextAnalysis.rollingHashFingerprint(col("text")).as("fp_roll"))
     },
 
     // winnowing (MOSS) fingerprint selection — one row per selected

@@ -22,11 +22,20 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("rolling hash: eval matches reference fold, interpreted == codegen") {
     val expected = "abc".foldLeft(0L)((h, ch) => (h * 31 + ch) % 1000000007L)
-    assert(one("abc", TextAnalysis.rollingHashFingerprint(
-      Seq("x").toDF("text"), "text")) === expected)
+    assert(one("abc", TextAnalysis.rollingHashFingerprint(col("text"))) === expected)
     // non-ASCII safety: stays in range, deterministic
     val h2 = one("héllo wörld", expr("rolling_hash(text)"))
     assert(h2.asInstanceOf[Long] >= 0L && h2.asInstanceOf[Long] < 1000000007L)
+  }
+
+  test("rollingHashFingerprint takes a Column: a column name with a space works") {
+    // the old (df, name) form spliced the name into SQL text, where
+    // `my text` fails to parse
+    val texts = Seq("abc", "héllo wörld")
+    val got = texts.toDF("my text")
+      .select(TextAnalysis.rollingHashFingerprint(col("my text")))
+      .collect().map(_.getLong(0)).toSeq
+    assert(got === texts.map(_.foldLeft(0L)((h, ch) => (h * 31 + ch) % 1000000007L)))
   }
 
   test("langId: argmax with fixed tiebreak, und when no hits") {
