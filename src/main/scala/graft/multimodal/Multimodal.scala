@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.operators.Pairs
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * payloads plus a typed metadata struct, with decode / feature-extract /
@@ -277,7 +278,7 @@ object Multimodal {
     hash
   }
 
-  /** dHash near-dup pairs `(a < b)` with Hamming distance ≤
+  /** dHash near-dup pairs `(a, b)` ([[Pairs]] order) with Hamming distance ≤
     * `maxHamming` over 64-bit signatures from [[dHash]]. Pigeonhole
     * banding (the [[graft.operators.Dedup.simHashPairs]] scheme at 64
     * bits): the signature splits into `maxHamming + 1` disjoint blocks,
@@ -287,59 +288,46 @@ object Multimodal {
     * `bit_count(xor)` projection. Never all-pairs: pair cost is
     * Σ(bucket²) over block-value buckets, the house candidate shape. */
   def dHashPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val banded = dHashBlocks(hashes, maxHamming)
-    banded.select(col("id").as("a"), col("phash").as("ph_a"),
-        col("block"), col("block_val"))
-      .join(banded.select(col("id").as("b"), col("phash").as("ph_b"),
-        col("block"), col("block_val")), Seq("block", "block_val"))
-      .filter(col("a") < col("b"))
-      // a pair agreeing on several blocks joins once per block; keep
-      // the row whose block is the LOWEST one the two signatures agree
-      // on — a pure projection on the signatures, so the dedup costs
-      // no shuffle (a distinct() here was a full exchange) and stays
-      // legal on a stream
-      .filter(col("block") ===
-        lowestMatchingBlock(col("ph_a"), col("ph_b"), maxHamming))
-      .withColumn("hamming", bit_count(col("ph_a").bitwiseXOR(col("ph_b"))))
+    // a pair agreeing on several blocks joins once per block; keep
+    // the row whose block is the LOWEST one the two signatures agree
+    // on — a pure projection on the signatures, so the dedup costs
+    // no shuffle (a distinct() here was a full exchange) and stays
+    // legal on a stream
+    verifyHamming(Pairs.self(dHashBlocks(hashes, maxHamming), "id",
+      Seq("block", "block_val"), "phash"), maxHamming)
+      .select(col("a"), col("b"), col("hamming"))
+  }
+
+  /** Banded candidate rows carrying `phash_a`/`phash_b`, deduped to one
+    * row per pair by [[lowestMatchingBlock]] and kept when within
+    * `maxHamming`, with an int `hamming` column. */
+  private def verifyHamming(cands: DataFrame, maxHamming: Int): DataFrame = {
+    val (a, b) = (col("phash_a"), col("phash_b"))
+    cands.filter(col("block") === lowestMatchingBlock(a, b, maxHamming))
+      .withColumn("hamming", bit_count(a.bitwiseXOR(b)))
       .filter(col("hamming") <= maxHamming)
-      .select(col("a"), col("b"), col("hamming").cast("int").as("hamming"))
+      .withColumn("hamming", col("hamming").cast("int"))
   }
 
   /** Lowest block index on which two signatures agree — the stateless
     * pair-dedup key for the banded joins: every joined row agrees on
     * its own block, so exactly the row carrying this index survives. */
   private def lowestMatchingBlock(a: Column, b: Column,
-      maxHamming: Int): Column = {
-    val blocks = maxHamming + 1
-    val width = 64 / blocks
-    def band(c: Column, bi: Int): Column = {
-      val lo = bi * width
-      val wd = if (bi == blocks - 1) 64 - lo else width
-      shiftrightunsigned(c, lo)
-        .bitwiseAND(if (wd >= 64) -1L else (1L << wd) - 1)
-    }
-    (0 until blocks).foldRight(lit(-1): Column) { (bi, acc) =>
-      when(band(a, bi) === band(b, bi), lit(bi)).otherwise(acc)
-    }
-  }
+      maxHamming: Int): Column =
+    Pairs.hammingBlocks(a, 64, maxHamming).zip(Pairs.hammingBlocks(b, 64, maxHamming))
+      .zipWithIndex.foldRight(lit(-1): Column) { case (((x, y), bi), acc) =>
+        when(x === y, lit(bi)).otherwise(acc)
+      }
 
   /** The pigeonhole banding behind [[dHashPairs]], exposed so a corpus
     * can PERSIST its block table (the phash index): `maxHamming + 1`
-    * disjoint blocks per signature, each row carrying the signature so
-    * the Hamming verify after a block-keyed join is a projection —
-    * no signature-table join at all. */
-  def dHashBlocks(hashes: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 64)
-    val blocks = maxHamming + 1
-    val width = 64 / blocks
-    hashes.select(col("id"), col("phash"), posexplode(
-      array((0 until blocks).map { bi =>
-        val lo = bi * width
-        val wd = if (bi == blocks - 1) 64 - lo else width
-        shiftrightunsigned(col("phash"), lo)
-          .bitwiseAND(if (wd >= 64) -1L else (1L << wd) - 1)
-      }: _*)).as(Seq("block", "block_val")))
-  }
+    * disjoint blocks per signature ([[Pairs.hammingBlocks]]), each row
+    * carrying the signature so the Hamming verify after a block-keyed
+    * join is a projection — no signature-table join at all. */
+  def dHashBlocks(hashes: DataFrame, maxHamming: Int): DataFrame =
+    hashes.select(col("id"), col("phash"), posexplode(array(
+      Pairs.hammingBlocks(col("phash"), 64, maxHamming): _*))
+      .as(Seq("block", "block_val")))
 
   /** Incremental dHash near-dup against a PERSISTED block index: the
     * ingest batch's signatures are banded fresh and equi-joined
@@ -350,22 +338,12 @@ object Multimodal {
     * perceptual modality). Output `(batch_id, corpus_id, hamming)`. */
   def dHashCrossPairs(batchHashes: DataFrame, corpusBlocks: DataFrame,
       maxHamming: Int = 3): DataFrame = {
-    dHashBlocks(batchHashes, maxHamming)
-      .select(col("id").as("batch_id"), col("phash").as("ph_a"),
-        col("block"), col("block_val"))
-      .join(corpusBlocks.select(col("id").as("corpus_id"),
-        col("phash").as("ph_b"), col("block"), col("block_val")),
-        Seq("block", "block_val"))
-      .filter(col("batch_id") =!= col("corpus_id"))
-      // stateless pair dedup (see dHashPairs) — this is also what
-      // keeps the STREAMING twin legal: a distinct() would be a
-      // stateful aggregation on an unbounded stream
-      .filter(col("block") ===
-        lowestMatchingBlock(col("ph_a"), col("ph_b"), maxHamming))
-      .withColumn("hamming", bit_count(col("ph_a").bitwiseXOR(col("ph_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("batch_id"), col("corpus_id"),
-        col("hamming").cast("int").as("hamming"))
+    // stateless pair dedup (see dHashPairs) — this is also what
+    // keeps the STREAMING twin legal: a distinct() would be a
+    // stateful aggregation on an unbounded stream
+    verifyHamming(Pairs.cross(dHashBlocks(batchHashes, maxHamming), corpusBlocks,
+      "id", Seq("block", "block_val"), "phash"), maxHamming)
+      .select(col("a").as("batch_id"), col("b").as("corpus_id"), col("hamming"))
   }
 
   /** The pooled-pixel feature kernel shared by [[decodeImageFeatures]]
@@ -837,12 +815,8 @@ object Multimodal {
     // the second pinned shuffle with no further exchange (guide §2.4).
     val np = f.sparkSession.sessionState.conf.numShufflePartitions
     val fr = f.join(rare, Seq("hash")).repartition(np, col("hash"))
-    val votes = fr
-      .select(col("hash"), col("id").as("a"), col("frame").as("fa"))
-      .join(fr.select(col("hash"), col("id").as("b"), col("frame").as("fb")),
-        Seq("hash"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"), (col("fa") - col("fb")).as("offset"))
+    val votes = Pairs.self(fr, "id", Seq("hash"), "frame")
+      .select(col("a"), col("b"), (col("frame_a") - col("frame_b")).as("offset"))
       .repartition(np, col("a"), col("b"))
       .groupBy(col("a"), col("b"), col("offset"))
       .agg(count(lit(1)).as("votes"))

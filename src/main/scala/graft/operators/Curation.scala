@@ -262,10 +262,7 @@ object Curation {
         s"$maxCellRows guard: raise nClusters (k should grow ~sqrt(n)) " +
         "or raise maxCellRows for a deliberate oversized run")
     }
-    val prepped = emb.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("emb_d"))
-      .withColumn("nrm", sqrt(Similarity.dot(col("emb_d"), col("emb_d"))))
-      .join(assigned, Seq("vec_id"))
+    val prepped = Similarity.withNorms(emb).join(assigned, Seq("vec_id"))
     val selType = "array<struct<vec_id:bigint,emb_d:array<double>,nrm:double>>"
     val cells = prepped.groupBy(col("cluster"))
       .agg(sort_array(collect_list(
@@ -317,9 +314,6 @@ object Curation {
       import spark.implicits._
       return Seq.empty[(Long, Int, Int)].toDF("vec_id", "cell", "sel_rank")
     }
-    def prep(df: DataFrame): DataFrame = df.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("emb_d"))
-      .withColumn("nrm", sqrt(Similarity.dot(col("emb_d"), col("emb_d"))))
     val assignedBatch = Clustering.assign(batch, centroids)
       .select(col("vec_id"), col("cluster").as("cell"))
     if (maxCellRows > 0) {
@@ -339,7 +333,8 @@ object Curation {
     // mutual-diversity guarantee and shifting sel_rank continuation.
     // Fail fast instead (the maxCellRows style); the store is a small
     // bounded artifact, so the two counts are cheap.
-    val storedJoined = selectedStore.join(prep(corpusEmb), Seq("vec_id"))
+    val storedJoined =
+      selectedStore.join(Similarity.withNorms(corpusEmb), Seq("vec_id"))
     val nStore = selectedStore.count()
     val nJoined = storedJoined.count()
     require(nJoined == nStore,
@@ -351,7 +346,7 @@ object Curation {
       .groupBy(col("cell"))
       .agg(sort_array(collect_list(struct(col("sel_rank"), col("vec_id"),
         col("emb_d"), col("nrm")))).as("__st"))
-    val batchCells = assignedBatch.join(prep(batch), Seq("vec_id"))
+    val batchCells = assignedBatch.join(Similarity.withNorms(batch), Seq("vec_id"))
       .groupBy(col("cell"))
       .agg(sort_array(collect_list(
         struct(col("vec_id"), col("emb_d"), col("nrm")))).as("__ms"))

@@ -576,7 +576,7 @@ object Dedup {
           .as("span_text"))
   }
 
-  /** Exact n-gram Jaccard similarity join: pairs (a < b) with
+  /** Exact n-gram Jaccard similarity join: pairs (a, b) ([[Pairs]] order) with
     * `|A∩B| / |A∪B| >= threshold` over distinct word n-gram shingles.
     *
     * Candidate pairs come from an equi-join on the shingle itself, so
@@ -610,16 +610,11 @@ object Dedup {
         sh.join(freq, "shingle")
       }
     val counts = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val a = capped.select(col("id").as("a"), col("shingle"))
-    val b = capped.select(col("id").as("b"), col("shingle"))
-    val inter = a.join(b, Seq("shingle"))
-      .filter(col("a") < col("b"))
+    val inter = Pairs.self(capped, "id", Seq("shingle"))
       .groupBy("a", "b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(counts.select(col("id").as("a"), col("n_sh").as("na")), Seq("a"))
-      .join(counts.select(col("id").as("b"), col("n_sh").as("nb")), Seq("b"))
+    Pairs.withSides(inter, counts, counts, "id", "n_sh")
       .withColumn("jaccard",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
+        col("inter").cast("double") / (col("n_sh_a") + col("n_sh_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
   }
@@ -677,27 +672,22 @@ object Dedup {
       // for the caller to retry instead of recomputing — see
       // CacheLifecycleSpec's contract note.
       .localCheckpoint(false)
-    val cands = prefix.select(col("id").as("a"), col("n_sh").as("na"), col("shingle"))
-      .join(prefix.select(col("id").as("b"), col("n_sh").as("nb"), col("shingle")),
-        Seq("shingle"))
+    val (na, nb) = (col("n_sh_a"), col("n_sh_b"))
+    val cands = Pairs.self(prefix, "id", Seq("shingle"), "n_sh")
       // same epsilon on the length filter: t*nb can exceed the exact
       // rational t·nb by an ulp and reject a boundary-sized true pair
-      .filter(col("a") < col("b") &&
-        col("na") >= lit(threshold) * col("nb") - lit(1e-9) &&
-        col("nb") >= lit(threshold) * col("na") - lit(1e-9))
-      .select("a", "b", "na", "nb").distinct()
+      .filter(na >= lit(threshold) * nb - lit(1e-9) &&
+        nb >= lit(threshold) * na - lit(1e-9))
+      .select("a", "b", "n_sh_a", "n_sh_b").distinct()
     // verify by per-pair array intersection rather than re-exploding the
     // shingle table into a second equi-join: candidates are few, arrays
     // are doc-sized, and one hash-set intersection per pair beats two
     // shuffle joins + a groupBy over exploded rows (measured ~40% off
     // the whole pair join; counts identical)
     val arrays = sh.groupBy("id").agg(collect_list(col("shingle")).as("arr"))
-    cands
-      .join(arrays.select(col("id").as("a"), col("arr").as("arr_a")), Seq("a"))
-      .join(arrays.select(col("id").as("b"), col("arr").as("arr_b")), Seq("b"))
+    Pairs.withSides(cands, arrays, arrays, "id", "arr")
       .withColumn("inter", size(array_intersect(col("arr_a"), col("arr_b"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
+      .withColumn("jaccard", col("inter").cast("double") / (na + nb - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
   }
@@ -710,9 +700,8 @@ object Dedup {
     * incremental run costs |batch shingles| ⋈ |corpus shingles| on the
     * bucket key — not a full re-dedup of the corpus. At scale the
     * corpus side's shingle table is the thing to persist between runs.
-    * If an id appears on BOTH sides (a re-ingested batch overlapping
-    * the corpus), its degenerate self-pair is filtered out — identity
-    * is not near-duplication. Construction runs Spark jobs (lazy internal
+    * An id on both sides is not paired with itself ([[Pairs]]).
+    * Construction runs Spark jobs (lazy internal
     * localCheckpoint — see the object scaladoc's MATERIALIZATION POLICY
     * for the lineage/retry trade).
     */
@@ -732,18 +721,15 @@ object Dedup {
     * and its join side), so uncached inputs are computed twice. */
   def crossJaccardPairsFromShingles(lsh: DataFrame, rsh: DataFrame,
       threshold: Double): DataFrame = {
-    val lc = lsh.groupBy("id").agg(count(lit(1)).as("n_l"))
-    val rc = rsh.groupBy("id").agg(count(lit(1)).as("n_r"))
-    lsh.select(col("id").as("left_id"), col("shingle"))
-      .join(rsh.select(col("id").as("right_id"), col("shingle")), Seq("shingle"))
-      .filter(col("left_id") =!= col("right_id"))
-      .groupBy("left_id", "right_id").agg(count(lit(1)).as("inter"))
-      .join(lc.select(col("id").as("left_id"), col("n_l")), Seq("left_id"))
-      .join(rc.select(col("id").as("right_id"), col("n_r")), Seq("right_id"))
+    def sizes(sh: DataFrame) = sh.groupBy("id").agg(count(lit(1)).as("n"))
+    val inter = Pairs.cross(lsh, rsh, "id", Seq("shingle"))
+      .groupBy("a", "b").agg(count(lit(1)).as("inter"))
+    Pairs.withSides(inter, sizes(lsh), sizes(rsh), "id", "n")
       .withColumn("jaccard",
-        col("inter").cast("double") / (col("n_l") + col("n_r") - col("inter")))
+        col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
-      .select(col("left_id"), col("right_id"), round(col("jaccard"), 6).as("jaccard"))
+      .select(col("a").as("left_id"), col("b").as("right_id"),
+        round(col("jaccard"), 6).as("jaccard"))
   }
 
   /** [[crossJaccardPairsFromShingles]] with the RIGHT (corpus) side
@@ -773,7 +759,7 @@ object Dedup {
     crossJaccardPairsFromShingles(lsh, rsh.join(candidateIds, "id"), threshold)
   }
 
-  /** Containment near-dup join: pairs (a < b) where
+  /** Containment near-dup join: pairs (a, b) ([[Pairs]] order) where
     * `|A∩B| / min(|A|,|B|)` >= threshold over distinct word n-gram
     * shingles — i.e. the SMALLER set is mostly inside the larger one.
     * Catches subset duplicates (a doc quoted or embedded wholesale in
@@ -788,15 +774,11 @@ object Dedup {
       n: Int, threshold: Double): DataFrame = {
     val sh = shingles(df, idCol, textCol, n).localCheckpoint(false)
     val counts = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val a = sh.select(col("id").as("a"), col("shingle"))
-    val b = sh.select(col("id").as("b"), col("shingle"))
-    a.join(b, Seq("shingle"))
-      .filter(col("a") < col("b"))
+    val inter = Pairs.self(sh, "id", Seq("shingle"))
       .groupBy("a", "b").agg(count(lit(1)).as("inter"))
-      .join(counts.select(col("id").as("a"), col("n_sh").as("na")), Seq("a"))
-      .join(counts.select(col("id").as("b"), col("n_sh").as("nb")), Seq("b"))
+    Pairs.withSides(inter, counts, counts, "id", "n_sh")
       .withColumn("containment",
-        col("inter").cast("double") / least(col("na"), col("nb")))
+        col("inter").cast("double") / least(col("n_sh_a"), col("n_sh_b")))
       .filter(col("containment") >= threshold)
       .select(col("a"), col("b"), round(col("containment"), 6).as("containment"))
   }
@@ -844,14 +826,10 @@ object Dedup {
     val arrays = sh.groupBy("id")
       .agg(collect_list(col("shingle")).as("arr"),
         count(lit(1)).as("n_sh"))
-    cands
-      .join(arrays.select(col("id").as("a"), col("arr").as("arr_a"),
-        col("n_sh").as("na")), Seq("a"))
-      .join(arrays.select(col("id").as("b"), col("arr").as("arr_b"),
-        col("n_sh").as("nb")), Seq("b"))
+    Pairs.withSides(cands, arrays, arrays, "id", "arr", "n_sh")
       .withColumn("inter", size(array_intersect(col("arr_a"), col("arr_b"))))
       .withColumn("containment",
-        col("inter").cast("double") / least(col("na"), col("nb")))
+        col("inter").cast("double") / least(col("n_sh_a"), col("n_sh_b")))
       .filter(col("containment") >= threshold)
       .select(col("a"), col("b"), round(col("containment"), 6).as("containment"))
   }
@@ -1066,14 +1044,9 @@ object Dedup {
     // (driver-verified 1.60x in round 16; see shingles' scaladoc)
     val sigs = minHashSignatures(shingles(df, idCol, textCol, n, fan = true), numHashes)
     val banded = bandedSignatures(sigs, numHashes, bands)
-    val cands = banded.select(col("id").as("a"), col("band"), col("band_key"))
-      .join(banded.select(col("id").as("b"), col("band"), col("band_key")),
-        Seq("band", "band_key"))
-      .filter(col("a") < col("b"))
+    val cands = Pairs.self(banded, "id", Seq("band", "band_key"))
       .select("a", "b").distinct()
-    cands
-      .join(sigs.select(col("id").as("a"), col("sig").as("sig_a")), Seq("a"))
-      .join(sigs.select(col("id").as("b"), col("sig").as("sig_b")), Seq("b"))
+    Pairs.withSides(cands, sigs, sigs, "id", "sig")
       .withColumn("est_jaccard", sigAgreement(col("sig_a"), col("sig_b"), numHashes))
       .filter(col("est_jaccard") >= threshold)
       .select(col("a"), col("b"), round(col("est_jaccard"), 6).as("est_jaccard"))
@@ -1087,25 +1060,17 @@ object Dedup {
     * corpus's stored signature table. The 100 TB MinHash shape: corpus
     * shingling + hashing are paid ONCE at ingest; each batch costs its
     * own signatures plus a bucket-keyed join linear in the batch.
-    * Ids on both sides are excluded (identity is not near-duplication,
-    * as in [[crossJaccardPairs]]). */
+    * An id on both sides is not paired with itself ([[Pairs]]). */
   def minHashLshCrossPairs(batchSigs: DataFrame, corpusBanded: DataFrame,
       corpusSigs: DataFrame, threshold: Double,
       numHashes: Int = 128, bands: Int = 32): DataFrame = {
     val bb = bandedSignatures(batchSigs, numHashes, bands)
-    val cands = bb.select(col("id").as("batch_id"), col("band"), col("band_key"))
-      .join(corpusBanded.select(col("id").as("corpus_id"), col("band"),
-        col("band_key")), Seq("band", "band_key"))
-      .filter(col("batch_id") =!= col("corpus_id"))
-      .select("batch_id", "corpus_id").distinct()
-    cands
-      .join(batchSigs.select(col("id").as("batch_id"), col("sig").as("sig_a")),
-        Seq("batch_id"))
-      .join(corpusSigs.select(col("id").as("corpus_id"), col("sig").as("sig_b")),
-        Seq("corpus_id"))
+    val cands = Pairs.cross(bb, corpusBanded, "id", Seq("band", "band_key"))
+      .select("a", "b").distinct()
+    Pairs.withSides(cands, batchSigs, corpusSigs, "id", "sig")
       .withColumn("est_jaccard", sigAgreement(col("sig_a"), col("sig_b"), numHashes))
       .filter(col("est_jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"),
+      .select(col("a").as("batch_id"), col("b").as("corpus_id"),
         round(col("est_jaccard"), 6).as("est_jaccard"))
   }
 
@@ -1151,20 +1116,10 @@ object Dedup {
     val assigned = Clustering.assign(emb, centroids)
       .select(col("vec_id"), col("cluster"))
     if (maxCellPairs > 0) guardCellPairs(assigned, nClusters, maxCellPairs)
-    val prepped = emb.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("emb_d"))
-      .withColumn("nrm", sqrt(Similarity.dot(col("emb_d"), col("emb_d"))))
-      .join(assigned, Seq("vec_id"))
-    val a = prepped.select(col("cluster"), col("vec_id").as("a"),
-      col("emb_d").as("emb_a"), col("nrm").as("nrm_a"))
-    val b = prepped.select(col("cluster"), col("vec_id").as("b"),
-      col("emb_d").as("emb_b"), col("nrm").as("nrm_b"))
-    a.join(b, Seq("cluster"))
-      .filter(col("a") < col("b"))
-      .withColumn("cos",
-        Similarity.dot(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("cos") >= threshold)
-      .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
+    val prepped = Similarity.withNorms(emb).join(assigned, Seq("vec_id"))
+    Similarity.verifyCosine(
+      Pairs.self(prepped, "vec_id", Seq("cluster"), "emb_d", "nrm"), threshold)
+      .select(col("a"), col("b"), col("cos"))
   }
 
   /** Refuse a cluster-then-pair plan whose within-cell pair space
@@ -1198,8 +1153,7 @@ object Dedup {
     * artifact (k·dim doubles) rides along as broadcast literals, which
     * is what makes the STREAMING twin
     * (graft.streaming.StreamingOps.incrementalSemanticDedup) stateless.
-    * Ids present in both sides are excluded (identity is not
-    * near-duplication, mirroring [[crossJaccardPairs]]). */
+    * An id on both sides is not paired with itself ([[Pairs]]). */
   def semanticCrossPairs(batch: DataFrame, corpus: DataFrame,
       centroids: Seq[(Int, Seq[Double])], threshold: Double): DataFrame = {
     val spark = batch.sparkSession
@@ -1207,21 +1161,12 @@ object Dedup {
       import spark.implicits._
       return Seq.empty[(Long, Long, Double)].toDF("batch_id", "corpus_id", "cos")
     }
-    def prep(df: DataFrame, idAs: String): DataFrame =
-      df.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("__emb"))
-        .withColumn("__nrm", sqrt(Similarity.dot(col("__emb"), col("__emb"))))
-        .join(Clustering.assign(df, centroids).select(col("vec_id"), col("cluster")),
-          Seq("vec_id"))
-        .select(col("cluster"), col("vec_id").as(idAs),
-          col("__emb").as(s"__emb_$idAs"), col("__nrm").as(s"__nrm_$idAs"))
-    prep(batch, "batch_id").join(prep(corpus, "corpus_id"), Seq("cluster"))
-      .filter(col("batch_id") =!= col("corpus_id"))
-      .withColumn("cos",
-        Similarity.dot(col("__emb_batch_id"), col("__emb_corpus_id")) /
-          (col("__nrm_batch_id") * col("__nrm_corpus_id")))
-      .filter(col("cos") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), round(col("cos"), 6).as("cos"))
+    def prep(df: DataFrame): DataFrame = Similarity.withNorms(df)
+      .join(Clustering.assign(df, centroids).select(col("vec_id"), col("cluster")),
+        Seq("vec_id"))
+    Similarity.verifyCosine(Pairs.cross(prep(batch), prep(corpus), "vec_id",
+        Seq("cluster"), "emb_d", "nrm"), threshold)
+      .select(col("a").as("batch_id"), col("b").as("corpus_id"), col("cos"))
   }
 
   /** 60-bit md5-derived shingle hash — portable: any engine with md5
@@ -1252,8 +1197,9 @@ object Dedup {
 
   /** SimHash pigeonhole block index over signature rows: (id, simhash,
     * block, block_val) with the 60 signature bits split into
-    * (maxHamming+1) blocks — any pair within hamming distance
-    * maxHamming shares at least one exact block. This IS the persisted
+    * (maxHamming+1) blocks ([[Pairs.hammingBlocks]]; maxHamming in
+    * [0, 60)) — any pair within hamming distance maxHamming shares at
+    * least one exact block. This IS the persisted
     * artifact of a production SimHash deployment (mirroring
     * [[bandedSignatures]] for MinHash): write it once for the corpus,
     * bucketed on block_val ([[graft.sources.Sinks.writeBucketed]]) so
@@ -1261,18 +1207,10 @@ object Dedup {
     * it with [[graft.sources.Sinks.appendBucketed]]. The signature
     * rides along in the row, so verification needs no second join
     * against a signature table. */
-  def simHashBlocks(sigs: DataFrame, maxHamming: Int): DataFrame = {
-    val blocks = maxHamming + 1
-    val width = SimHashBits / blocks
-    sigs.select(col("id"), col("simhash"), posexplode(
-      array((0 until blocks).map { bi =>
-        val lo = bi * width
-        val w = if (bi == blocks - 1) SimHashBits - lo else width
-        // unsigned shift: extract bits [lo, lo+w)
-        shiftrightunsigned(col("simhash"), lo)
-          .bitwiseAND(if (w >= 64) -1L else (1L << w) - 1)
-      }: _*)).as(Seq("block", "block_val")))
-  }
+  def simHashBlocks(sigs: DataFrame, maxHamming: Int): DataFrame =
+    sigs.select(col("id"), col("simhash"), posexplode(array(
+      Pairs.hammingBlocks(col("simhash"), SimHashBits, maxHamming): _*))
+      .as(Seq("block", "block_val")))
 
   /** SimHash near-dup: pairs with hamming distance <= maxHamming.
     * Pigeonhole banding ([[simHashBlocks]]): the candidate join is an
@@ -1288,14 +1226,9 @@ object Dedup {
     // under AQE
     val sigs = simHashSignatures(shingles(df, idCol, textCol, n))
     val banded = simHashBlocks(sigs, maxHamming)
-    val cands = banded.select(col("id").as("a"), col("simhash").as("sh_a"),
-        col("block"), col("block_val"))
-      .join(banded.select(col("id").as("b"), col("simhash").as("sh_b"),
-        col("block"), col("block_val")), Seq("block", "block_val"))
-      .filter(col("a") < col("b"))
-      .select("a", "b", "sh_a", "sh_b").distinct()
-    cands
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
+    Pairs.self(banded, "id", Seq("block", "block_val"), "simhash")
+      .select("a", "b", "simhash_a", "simhash_b").distinct()
+      .withColumn("hamming", bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))))
       .filter(col("hamming") <= maxHamming)
       .select(col("a"), col("b"), col("hamming").cast("int").as("hamming"))
   }
@@ -1307,21 +1240,16 @@ object Dedup {
     * verify is a projection — no signature-table join at all. The
     * corpus pays shingling/signing once at ingest; each batch costs its
     * own signatures plus a bucket-keyed join linear in the batch (the
-    * same lifecycle as [[minHashLshCrossPairs]]). Ids on both sides are
-    * excluded (identity is not near-duplication). */
+    * same lifecycle as [[minHashLshCrossPairs]]). An id on both sides is
+    * not paired with itself ([[Pairs]]). */
   def simHashCrossPairs(batchSigs: DataFrame, corpusBlocks: DataFrame,
       maxHamming: Int): DataFrame = {
-    val bb = simHashBlocks(batchSigs, maxHamming)
-    bb.select(col("id").as("batch_id"), col("simhash").as("sh_a"),
-        col("block"), col("block_val"))
-      .join(corpusBlocks.select(col("id").as("corpus_id"),
-        col("simhash").as("sh_b"), col("block"), col("block_val")),
-        Seq("block", "block_val"))
-      .filter(col("batch_id") =!= col("corpus_id"))
-      .select("batch_id", "corpus_id", "sh_a", "sh_b").distinct()
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
+    Pairs.cross(simHashBlocks(batchSigs, maxHamming), corpusBlocks, "id",
+        Seq("block", "block_val"), "simhash")
+      .select("a", "b", "simhash_a", "simhash_b").distinct()
+      .withColumn("hamming", bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))))
       .filter(col("hamming") <= maxHamming)
-      .select(col("batch_id"), col("corpus_id"),
+      .select(col("a").as("batch_id"), col("b").as("corpus_id"),
         col("hamming").cast("int").as("hamming"))
   }
 
@@ -1519,17 +1447,13 @@ object Dedup {
       .filter(col("__df") > maxDf).select("fp")
     val cpruned = corpusIndex.join(frequent, Seq("fp"), "left_anti")
     val bpruned = bfp.join(frequent, Seq("fp"), "left_anti")
-    val csz = cpruned.groupBy("id").agg(count(lit(1)).as("__nc"))
-    val bsz = bpruned.groupBy("id").agg(count(lit(1)).as("__nb"))
-    bpruned.select(col("id").as("batch_id"), col("fp"))
-      .join(cpruned.select(col("id").as("corpus_id"), col("fp")), Seq("fp"))
-      .filter(col("batch_id") =!= col("corpus_id"))
-      .groupBy("batch_id", "corpus_id").agg(count(lit(1)).as("shared"))
+    def sizes(fps: DataFrame) = fps.groupBy("id").agg(count(lit(1)).as("nf"))
+    val shared = Pairs.cross(bpruned, cpruned, "id", Seq("fp"))
+      .groupBy("a", "b").agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
-      .join(bsz.select(col("id").as("batch_id"), col("__nb")), Seq("batch_id"))
-      .join(csz.select(col("id").as("corpus_id"), col("__nc")), Seq("corpus_id"))
-      .select(col("batch_id"), col("corpus_id"), col("shared"),
-        round(col("shared") / least(col("__nb"), col("__nc")), 6).as("overlap"))
+    Pairs.withSides(shared, sizes(bpruned), sizes(cpruned), "id", "nf")
+      .select(col("a").as("batch_id"), col("b").as("corpus_id"), col("shared"),
+        round(col("shared") / least(col("nf_a"), col("nf_b")), 6).as("overlap"))
   }
 
   /** Winnowing (MOSS) shared-fingerprint near-dup join: pairs sharing
@@ -1557,14 +1481,11 @@ object Dedup {
       .select("fp")
     val pruned = fp.join(rare, Seq("fp"))
     val sizes = pruned.groupBy("id").agg(count(lit(1)).as("nf"))
-    pruned.select(col("id").as("id_a"), col("fp"))
-      .join(pruned.select(col("id").as("id_b"), col("fp")), Seq("fp"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
+    val shared = Pairs.self(pruned, "id", Seq("fp"))
+      .groupBy("a", "b").agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
-      .join(sizes.select(col("id").as("id_a"), col("nf").as("__na")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("nf").as("__nb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("shared"),
-        round(col("shared") / least(col("__na"), col("__nb")), 6).as("overlap"))
+    Pairs.withSides(shared, sizes, sizes, "id", "nf")
+      .select(col("a").as("id_a"), col("b").as("id_b"), col("shared"),
+        round(col("shared") / least(col("nf_a"), col("nf_b")), 6).as("overlap"))
   }
 }

@@ -82,9 +82,7 @@ object Similarity {
     guardSize(emb, maxRows, "bruteForceTopK", "ivfTopK")
     // norms and double-casts precomputed per VECTOR (n of them), not per
     // scored pair (n·q of them) — same arithmetic, 3x fewer array folds
-    val prepped = emb.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("emb_d"))
-      .withColumn("nrm", sqrt(dot(col("emb_d"), col("emb_d"))))
+    val prepped = withNorms(emb)
     val q = prepped.filter(col("vec_id") % every === 0L)
       .select(col("vec_id").as("query_id"), col("emb_d").as("q_emb"),
         col("nrm").as("q_nrm"))
@@ -107,17 +105,12 @@ object Similarity {
   def exactNeardupPairs(emb: DataFrame, threshold: Double,
       maxRows: Long = DefaultBruteForceMaxRows): DataFrame = {
     guardSize(emb, maxRows, "exactNeardupPairs", "srpNeardupPairs")
-    val prepped = emb.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("emb_d"))
-      .withColumn("nrm", sqrt(dot(col("emb_d"), col("emb_d"))))
-    val a = prepped.select(col("vec_id").as("a"), col("emb_d").as("emb_a"),
-      col("nrm").as("nrm_a"))
-    val b = prepped.select(col("vec_id").as("b"), col("emb_d").as("emb_b"),
-      col("nrm").as("nrm_b"))
-    a.crossJoin(broadcast(b)).filter(col("a") < col("b"))
-      .withColumn("cos", dot(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("cos") >= threshold)
-      .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
+    val prepped = withNorms(emb)
+    def side(s: String) = prepped.select(col("vec_id").as(s),
+      col("emb_d").as(s"emb_d_$s"), col("nrm").as(s"nrm_$s"))
+    verifyCosine(side("a").crossJoin(broadcast(side("b"))).filter(col("a") < col("b")),
+      threshold)
+      .select(col("a"), col("b"), col("cos"))
   }
 
   /** Deterministic pseudo-random unit hyperplanes (seeded). */
@@ -147,25 +140,29 @@ object Similarity {
     * admit a pair on one side only. */
   def srpNeardupPairs(emb: DataFrame, dim: Int, threshold: Double,
       nBits: Int = 32, bands: Int = 8, seed: Long = 42L): DataFrame = {
-    val prepped = emb.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("emb_d"))
-      .withColumn("nrm", sqrt(dot(col("emb_d"), col("emb_d"))))
+    val prepped = withNorms(emb)
     val banded = srpBandedSignatures(emb, dim, nBits, bands, seed)
     // candidates dedup on bare id pairs (cheap), embeddings re-joined after
-    val cands = banded.select(col("vec_id").as("a"), col("band"), col("band_key"))
-      .join(banded.select(col("vec_id").as("b"), col("band"), col("band_key")),
-        Seq("band", "band_key"))
-      .filter(col("a") < col("b"))
+    val cands = Pairs.self(banded, "vec_id", Seq("band", "band_key"))
       .select("a", "b").distinct()
-    cands
-      .join(prepped.select(col("vec_id").as("a"), col("emb_d").as("emb_a"),
-        col("nrm").as("nrm_a")), Seq("a"))
-      .join(prepped.select(col("vec_id").as("b"), col("emb_d").as("emb_b"),
-        col("nrm").as("nrm_b")), Seq("b"))
-      .withColumn("cos", dot(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("cos") >= threshold)
-      .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
+    verifyCosine(Pairs.withSides(cands, prepped, prepped, "vec_id", "emb_d", "nrm"),
+      threshold)
+      .select(col("a"), col("b"), col("cos"))
   }
+
+  /** `(vec_id, emb_d, nrm)`: the embedding as `array<double>` and its L2
+    * norm, computed once per vector rather than once per scored pair. */
+  private[operators] def withNorms(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("embedding").cast("array<double>").as("emb_d"))
+      .withColumn("nrm", sqrt(dot(col("emb_d"), col("emb_d"))))
+
+  /** Pairs carrying `emb_d_a`/`nrm_a`/`emb_d_b`/`nrm_b` whose cosine
+    * reaches `threshold`, with `cos` rounded to 6 decimals. */
+  private[operators] def verifyCosine(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.withColumn("cos", Pairs.cosine(dot(col("emb_d_a"), col("emb_d_b")),
+        col("nrm_a") * col("nrm_b")))
+      .filter(col("cos") >= threshold)
+      .withColumn("cos", round(col("cos"), 6))
 
   /** SRP banded signature index over an embedding table: (vec_id, band,
     * band_key) — the PERSISTED artifact of a production SRP-LSH
@@ -209,29 +206,17 @@ object Similarity {
     * verified by exact cosine against the corpus embedding table. The
     * corpus pays signing once at ingest; each batch costs its own
     * signatures plus a bucket-keyed join linear in the batch — the same
-    * lifecycle as [[Dedup.minHashLshCrossPairs]]. Ids on both sides are
-    * excluded (identity is not near-duplication). */
+    * lifecycle as [[Dedup.minHashLshCrossPairs]]. An id on both sides is
+    * not paired with itself ([[Pairs]]). */
   def srpNeardupCrossPairs(batch: DataFrame, corpusBanded: DataFrame,
       corpus: DataFrame, dim: Int, threshold: Double, nBits: Int = 32,
       bands: Int = 8, seed: Long = 42L): DataFrame = {
     val bb = srpBandedSignatures(batch, dim, nBits, bands, seed)
-    val cands = bb.select(col("vec_id").as("batch_id"), col("band"), col("band_key"))
-      .join(corpusBanded.select(col("vec_id").as("corpus_id"), col("band"),
-        col("band_key")), Seq("band", "band_key"))
-      .filter(col("batch_id") =!= col("corpus_id"))
-      .select("batch_id", "corpus_id").distinct()
-    def prep(df: DataFrame, idAs: String): DataFrame =
-      df.select(col("vec_id").as(idAs),
-          col("embedding").cast("array<double>").as(s"__emb_$idAs"))
-        .withColumn(s"__nrm_$idAs",
-          sqrt(dot(col(s"__emb_$idAs"), col(s"__emb_$idAs"))))
-    cands
-      .join(prep(batch, "batch_id"), Seq("batch_id"))
-      .join(prep(corpus, "corpus_id"), Seq("corpus_id"))
-      .withColumn("cos", dot(col("__emb_batch_id"), col("__emb_corpus_id")) /
-        (col("__nrm_batch_id") * col("__nrm_corpus_id")))
-      .filter(col("cos") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), round(col("cos"), 6).as("cos"))
+    val cands = Pairs.cross(bb, corpusBanded, "vec_id", Seq("band", "band_key"))
+      .select("a", "b").distinct()
+    verifyCosine(Pairs.withSides(cands, withNorms(batch), withNorms(corpus),
+      "vec_id", "emb_d", "nrm"), threshold)
+      .select(col("a").as("batch_id"), col("b").as("corpus_id"), col("cos"))
   }
 
   /** IVF-style top-k with TRAINED coarse centroids: the quantizer is

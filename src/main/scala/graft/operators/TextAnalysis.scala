@@ -411,7 +411,7 @@ object TextAnalysis {
       .select(col("id"), col("term"), col("tf"), col("df"), col("tfidf"))
   }
 
-  /** Sparse TF-IDF cosine similarity join: pairs (a < b) with
+  /** Sparse TF-IDF cosine similarity join: pairs (a, b) ([[Pairs]] order) with
     * `cos(w_a, w_b) >= threshold` over the documents' TF-IDF weight
     * vectors — the lexical-overlap near-dup signal that, unlike
     * n-gram Jaccard, weighs RARE shared terms heavily and ignores
@@ -450,21 +450,25 @@ object TextAnalysis {
       .select(col("id"), col("term"), col("df"),
         round(col("tfidf") * 1e6).cast("long").as("w"))
     val w = if (maxTermDf <= 0) w0 else w0.filter(col("df") <= maxTermDf)
-    val norms = w.groupBy("id")
+    weightCosine(Pairs.self(w, "id", Seq("term"), "w"), w, w, threshold)
+      .select(col("a"), col("b"), col("cos"))
+  }
+
+  /** Cosine of `(id, term, w)` weight vectors over candidate rows from
+    * [[Pairs]] (one per shared term, carrying `w_a`/`w_b`): dot products
+    * and norms summed exactly as integers, the pairs reaching
+    * `threshold` kept with `cos` rounded to 6 decimals. */
+  private def weightCosine(termPairs: DataFrame, wa: DataFrame, wb: DataFrame,
+      threshold: Double): DataFrame = {
+    def norms(w: DataFrame): DataFrame = w.groupBy("id")
       .agg(sum((col("w") * col("w")).cast("decimal(38,0)")).as("n2"))
-    val prods = w.select(col("term"), col("id").as("a"), col("w").as("wa"))
-      .join(w.select(col("term"), col("id").as("b"), col("w").as("wb")),
-        Seq("term"))
-      .filter(col("a") < col("b"))
-      .groupBy("a", "b")
-      .agg(sum((col("wa") * col("wb")).cast("decimal(38,0)")).as("dot"))
-    prods
-      .join(norms.select(col("id").as("a"), col("n2").as("na2")), Seq("a"))
-      .join(norms.select(col("id").as("b"), col("n2").as("nb2")), Seq("b"))
-      .withColumn("cos", col("dot").cast("double") /
-        sqrt(col("na2").cast("double") * col("nb2").cast("double")))
+    val dots = termPairs.groupBy("a", "b")
+      .agg(sum((col("w_a") * col("w_b")).cast("decimal(38,0)")).as("dot"))
+    Pairs.withSides(dots, norms(wa), norms(wb), "id", "n2")
+      .withColumn("cos", Pairs.cosine(col("dot").cast("double"),
+        sqrt(col("n2_a").cast("double") * col("n2_b").cast("double"))))
       .filter(col("cos") >= threshold)
-      .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
+      .withColumn("cos", round(col("cos"), 6))
   }
 
   /** Incremental (batch-vs-corpus) TF-IDF cosine join: score a NEW
@@ -533,24 +537,8 @@ object TextAnalysis {
     * norm and the dot-product join), so uncached inputs compute twice. */
   def tfidfCosineCrossFromWeights(wb: DataFrame, wc: DataFrame,
       threshold: Double): DataFrame = {
-    def norms(w: DataFrame): DataFrame = w.groupBy("id")
-      .agg(sum((col("w") * col("w")).cast("decimal(38,0)")).as("n2"))
-    val prods = wb.select(col("term"), col("id").as("batch_id"), col("w").as("wa"))
-      .join(wc.select(col("term"), col("id").as("corpus_id"), col("w").as("wb")),
-        Seq("term"))
-      .filter(col("batch_id") =!= col("corpus_id"))
-      .groupBy("batch_id", "corpus_id")
-      .agg(sum((col("wa") * col("wb")).cast("decimal(38,0)")).as("dot"))
-    prods
-      .join(norms(wb).select(col("id").as("batch_id"), col("n2").as("na2")),
-        Seq("batch_id"))
-      .join(norms(wc).select(col("id").as("corpus_id"), col("n2").as("nb2")),
-        Seq("corpus_id"))
-      .withColumn("cos", col("dot").cast("double") /
-        sqrt(col("na2").cast("double") * col("nb2").cast("double")))
-      .filter(col("cos") >= threshold)
-      .select(col("batch_id"), col("corpus_id"),
-        round(col("cos"), 6).as("cos"))
+    weightCosine(Pairs.cross(wb, wc, "id", Seq("term"), "w"), wb, wc, threshold)
+      .select(col("a").as("batch_id"), col("b").as("corpus_id"), col("cos"))
   }
 
   /** BM25 relevance of every document against a fixed query term set —

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Pairs}
 import graft.sources.Sources.table
 
 /** Dedup queries over `documents`. ALL paths are DuckDB-oracled,
@@ -172,9 +172,7 @@ object DedupQueries {
       import org.apache.spark.sql.functions.{col, levenshtein}
       val docs = table(s, dir, "documents")
       val pairs = Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text", 3, 0.8)
-      pairs
-        .join(docs.select(col("doc_id").as("a"), col("text").as("text_a")), Seq("a"))
-        .join(docs.select(col("doc_id").as("b"), col("text").as("text_b")), Seq("b"))
+      Pairs.withSides(pairs, docs, docs, "doc_id", "text")
         .select(col("a"), col("b"), col("jaccard"),
           levenshtein(col("text_a"), col("text_b")).as("edit_dist"))
     },

@@ -9,7 +9,7 @@ import org.scalacheck.{Gen, Prop, Properties}
   */
 object WordCountProps extends Properties("WordCount") {
 
-  private[core] lazy val spark = {
+  private[graft] lazy val spark = {
     val s = org.apache.spark.sql.SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")

@@ -221,4 +221,111 @@ class EdgeCasesSpec extends SparkSpec {
     assert((t.getLong(0), t.getLong(1), t.getLong(2), t.getDouble(3)) ===
       ((0L, 0L, 0L, 0.0)))
   }
+
+  // ---- degenerate pair inputs: identical rows and zero norms ----
+
+  private val twinText = "the quick brown fox jumps over the lazy dog by the river bank"
+  private def twinDocs = Seq((1L, twinText), (2L, twinText)).toDF("doc_id", "text")
+  private def docsOf(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+  private def embOf(rows: (Long, Seq[Float])*) = rows.toDF("vec_id", "embedding")
+  private val vec = Seq(1f, 2f, 3f, 4f)
+  private val zero = Seq(0f, 0f, 0f, 0f)
+  private def sigs(d: org.apache.spark.sql.DataFrame) =
+    Dedup.minHashSignatures(Dedup.shingles(d, "doc_id", "text", 3), 128)
+  private def simSigs(d: org.apache.spark.sql.DataFrame) =
+    Dedup.simHashSignatures(Dedup.shingles(d, "doc_id", "text", 3))
+  private val unitCentroid = Seq((0, Seq(1.0, 1.0, 1.0, 1.0)))
+
+  test("pair operators on two identical inputs give their one pair at a " +
+      "perfect score") {
+    import graft.multimodal.Multimodal
+    val (batch, corpus) = (docsOf((1L, twinText)), docsOf((2L, twinText)))
+    val (batchEmb, corpusEmb) = (embOf((1L, vec)), embOf((2L, vec)))
+    val twinEmb = embOf((1L, vec), (2L, vec))
+    val phash = 0x0123456789abcdefL
+    val fps = (for (id <- Seq(1L, 2L); f <- 0 until 5)
+      yield Multimodal.AudioFingerprint(id, f.toLong, 100 + f)).toDS()
+    // (operator, result, score column, the score identical inputs must get)
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame, String, Double)] = Seq(
+      ("ngramJaccardPairs", () =>
+        Dedup.ngramJaccardPairs(twinDocs, "doc_id", "text", 3, 0.8), "jaccard", 1.0),
+      ("ngramJaccardPairsPrefix", () =>
+        Dedup.ngramJaccardPairsPrefix(twinDocs, "doc_id", "text", 3, 0.8), "jaccard", 1.0),
+      ("containmentPairs", () =>
+        Dedup.containmentPairs(twinDocs, "doc_id", "text", 3, 0.8), "containment", 1.0),
+      ("minHashLshPairs", () =>
+        Dedup.minHashLshPairs(twinDocs, "doc_id", "text", 3, 0.8), "est_jaccard", 1.0),
+      ("semanticPairs", () => Dedup.semanticPairs(twinEmb, 0.9), "cos", 1.0),
+      ("simHashPairs", () => Dedup.simHashPairs(twinDocs, "doc_id", "text", 3), "hamming", 0),
+      ("winnowSharedPairs", () =>
+        Dedup.winnowSharedPairs(twinDocs, "doc_id", "text"), "overlap", 1.0),
+      ("srpNeardupPairs", () => Similarity.srpNeardupPairs(twinEmb, 4, 0.9), "cos", 1.0),
+      ("tfidfCosinePairs", () => TextAnalysis.tfidfCosinePairs(
+        docsOf((1L, "red fox"), (2L, "red fox"), (3L, "blue whale")),
+        "doc_id", "text", 0.5), "cos", 1.0),
+      ("dHashPairs", () => Multimodal.dHashPairs(
+        Seq((1L, phash), (2L, phash)).toDF("id", "phash")), "hamming", 0),
+      ("audioFingerprintMatches", () =>
+        Multimodal.audioFingerprintMatches(fps, minVotes = 3), "offset", 0),
+      ("crossJaccardPairsFromShingles", () => Dedup.crossJaccardPairsFromShingles(
+        Dedup.shingles(batch, "doc_id", "text", 3),
+        Dedup.shingles(corpus, "doc_id", "text", 3), 0.8), "jaccard", 1.0),
+      ("minHashLshCrossPairs", () => Dedup.minHashLshCrossPairs(sigs(batch),
+        Dedup.bandedSignatures(sigs(corpus), 128, 32), sigs(corpus), 0.8),
+        "est_jaccard", 1.0),
+      ("semanticCrossPairs", () =>
+        Dedup.semanticCrossPairs(batchEmb, corpusEmb, unitCentroid, 0.9), "cos", 1.0),
+      ("simHashCrossPairs", () => Dedup.simHashCrossPairs(simSigs(batch),
+        Dedup.simHashBlocks(simSigs(corpus), 3), 3), "hamming", 0),
+      ("winnowCrossPairs", () => Dedup.winnowCrossPairs(batch,
+        Dedup.winnowFingerprintIndex(corpus, "doc_id", "text"), "doc_id", "text"),
+        "overlap", 1.0),
+      ("srpNeardupCrossPairs", () => Similarity.srpNeardupCrossPairs(batchEmb,
+        Similarity.srpBandedSignatures(corpusEmb, 4), corpusEmb, 4, 0.9), "cos", 1.0),
+      ("tfidfCosineCrossFromWeights", () => TextAnalysis.tfidfCosineCrossFromWeights(
+        Seq((1L, "x", 5L), (1L, "y", 3L)).toDF("id", "term", "w"),
+        Seq((2L, "x", 5L), (2L, "y", 3L)).toDF("id", "term", "w"), 0.5), "cos", 1.0),
+      ("dHashCrossPairs", () => Multimodal.dHashCrossPairs(
+        Seq((1L, phash)).toDF("id", "phash"),
+        Multimodal.dHashBlocks(Seq((2L, phash)).toDF("id", "phash"), 3)), "hamming", 0),
+      ("exactNeardupPairs", () => Similarity.exactNeardupPairs(twinEmb, 0.9), "cos", 1.0))
+    cases.foreach { case (op, run, scoreCol, score) =>
+      val rows = run().collect()
+      assert(rows.length === 1, s"$op: ${rows.mkString(", ")}")
+      val r = rows.head
+      assert((r.getLong(0), r.getLong(1)) === ((1L, 2L)), s"$op: $r")
+      assert(r.getAs[Number](scoreCol).doubleValue === score, s"$op: $r")
+    }
+  }
+
+  test("cosine pair operators on zero-norm inputs give no pair and no " +
+      "exception") {
+    val zeroEmb = embOf((1L, zero), (2L, zero))
+    // every term in every doc: idf 0, so every weight and norm is 0
+    val sameDocs = docsOf((1L, "red fox"), (2L, "red fox"))
+    val zeroW = Seq((1L, "x", 0L)).toDF("id", "term", "w")
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("exactNeardupPairs", () => Similarity.exactNeardupPairs(zeroEmb, 0.0)),
+      ("srpNeardupPairs", () => Similarity.srpNeardupPairs(zeroEmb, 4, 0.0)),
+      ("srpNeardupCrossPairs", () => Similarity.srpNeardupCrossPairs(
+        embOf((1L, zero)), Similarity.srpBandedSignatures(embOf((2L, zero)), 4),
+        embOf((2L, zero)), 4, 0.0)),
+      ("semanticPairs", () => Dedup.semanticPairs(zeroEmb, 0.0)),
+      ("semanticCrossPairs", () => Dedup.semanticCrossPairs(
+        embOf((1L, zero)), embOf((2L, zero)), unitCentroid, 0.0)),
+      ("tfidfCosinePairs", () =>
+        TextAnalysis.tfidfCosinePairs(sameDocs, "doc_id", "text", 0.0)),
+      ("tfidfCosineCrossFromWeights", () => TextAnalysis.tfidfCosineCrossFromWeights(
+        zeroW, zeroW.withColumn("id", lit(2L)), 0.0)))
+    cases.foreach { case (op, run) =>
+      assert(run().collect().isEmpty, op)
+    }
+  }
+
+  test("simHashBlocks refuses maxHamming = 60: its blocks would be 0 bits " +
+      "wide and match every pair") {
+    val sig = Seq((1L, 5L)).toDF("id", "simhash")
+    assert(Dedup.simHashBlocks(sig, 59).count() === 60)
+    intercept[IllegalArgumentException](Dedup.simHashBlocks(sig, 60))
+  }
 }
