@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * constructor; (2) lineage is truncated onto unreplicated executor
   * blocks, so a lost executor FAILS the query (caller retries) instead
   * of recomputing — the deliberate trade for GC-freed blocks with no
-  * session-lifetime CacheManager pin (CacheLifecycleSpec enforces the
+  * session-lifetime CacheManager pin (EngineSweepSpec enforces the
   * pairing). Callers needing plan-only construction or executor-loss
   * resilience should use the `*FromShingles` composed forms and manage
   * caching themselves.
@@ -600,7 +600,7 @@ object Dedup {
     // shingles feed three consumers (counts + both join sides); lazy
     // localCheckpoint so the tokenize/explode scan runs once, not three
     // times — blocks freed on GC, no session-lifetime CacheManager pin
-    // (the lexicalTopK lifecycle rule, swept by CacheLifecycleSpec)
+    // (the lexicalTopK lifecycle rule, swept by EngineSweepSpec)
     val sh = shingles(df, idCol, textCol, n).localCheckpoint(false)
     val capped =
       if (maxShingleFreq <= 0) sh
@@ -670,7 +670,7 @@ object Dedup {
       // materializes the upstream stages (lazy checkpoint + AQE), and
       // the truncated lineage means a lost executor fails the query
       // for the caller to retry instead of recomputing — see
-      // CacheLifecycleSpec's contract note.
+      // EngineSweepSpec's contract note.
       .localCheckpoint(false)
     val (na, nb) = (col("n_sh_a"), col("n_sh_b"))
     val cands = Pairs.self(prefix, "id", Seq("shingle"), "n_sh")

@@ -124,7 +124,7 @@ object Drift {
       // provable-bound marker: the profile IS exactly nBins rows (the
       // exploded 0..nBins-1 spine), but explode() erases `maxRows`, so
       // without this no-op limit Catalyst can't prove a downstream
-      // crossJoin(broadcast(profile)) is bounded — the Round7PlanSpec
+      // crossJoin(broadcast(profile)) is bounded — the EngineSweepSpec
       // engine-wide join sweep (and any size-based join planning)
       // depends on the bound being visible in the plan.
       .limit(nBins)

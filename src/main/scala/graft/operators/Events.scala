@@ -338,7 +338,7 @@ object Events {
     * that array (the Stats.distributedNtile pattern). Keeps the engine
     * at ZERO unpartitioned windows, so a "No Partition Defined"
     * warning in any log is a real regression, never expected noise
-    * (Round6PlanSpec sweeps every query plan for that invariant).
+    * (EngineSweepSpec sweeps every query plan for that invariant).
     * Sum order inside each fold is day-ascending — deterministic. */
   def gapFillMovingAvg(g: DataFrame, maWindow: Int): DataFrame = {
     val n = maWindow

@@ -56,7 +56,9 @@ object Pairs {
   /** Cosine from a dot product and the product of the two norms; NULL
     * when a norm is 0 (an all-zero embedding, or a document whose every
     * term is in every document), so the caller's `cos >= threshold`
-    * drops the pair instead of ANSI mode's `x / 0.0` failing the query. */
+    * drops the pair, and a top-k's `desc(cos)` ranks it after every
+    * scored neighbour, instead of ANSI mode's `x / 0.0` failing the
+    * query. */
   def cosine(dot: Column, normProduct: Column): Column =
     try_divide(dot, normProduct)
 

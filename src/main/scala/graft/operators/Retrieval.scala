@@ -167,8 +167,8 @@ object Retrieval {
         Seq("query_id"))
       .join(norms(wc).select(col("id").as("neighbor_id"), col("n2").as("nn2")),
         Seq("neighbor_id"))
-      .withColumn("cos", col("dot").cast("double") /
-        sqrt(col("nq2").cast("double") * col("nn2").cast("double")))
+      .withColumn("cos", Pairs.cosine(col("dot").cast("double"),
+        sqrt(col("nq2").cast("double") * col("nn2").cast("double"))))
     val win = Window.partitionBy(col("query_id"))
       .orderBy(desc("cos"), asc("neighbor_id"))
     scored.withColumn("rank", row_number().over(win))

@@ -67,7 +67,9 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** NULL when either vector is all zeros ([[Pairs.cosine]]); a NULL
+    * score ranks after every scored neighbour under `desc`. */
+  def cosine(a: Column, b: Column): Column = Pairs.cosine(dot(a, b), norm(a) * norm(b))
 
   /** Exact top-k cosine neighbors for a query subset (`vec_id % every
     * == 0`), self excluded. The query side is broadcast; ranking is a
@@ -90,7 +92,8 @@ object Similarity {
       .select(col("vec_id").as("neighbor_id"), col("emb_d"), col("nrm"))
       .crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("q_emb"), col("emb_d")) / (col("q_nrm") * col("nrm")))
+      .withColumn("cos", Pairs.cosine(dot(col("q_emb"), col("emb_d")),
+        col("q_nrm") * col("nrm")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(desc("cos"), asc("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -369,7 +372,8 @@ object Similarity {
         explode(transform(col("__cells"), s => s.getField("cell"))).as("cell"))
     val scored = assigned.join(broadcast(probes), Seq("cell"))
       .filter(if (excludeSameId) col("vec_id") =!= col("query_id") else lit(true))
-      .withColumn("cos", dot(col("q_emb"), col("emb_d")) / (col("q_nrm") * col("nrm")))
+      .withColumn("cos", Pairs.cosine(dot(col("q_emb"), col("emb_d")),
+        col("q_nrm") * col("nrm")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(desc("cos"), asc("vec_id"))
     scored.withColumn("rank", row_number().over(w))

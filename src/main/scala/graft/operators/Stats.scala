@@ -81,7 +81,7 @@ object Stats {
     // unpersisted and would pin one CacheManager entry per call for the
     // session's lifetime; checkpoint blocks are freed by the
     // ContextCleaner once the frame is unreachable (the lexicalTopK
-    // lifecycle rule, swept by CacheLifecycleSpec).
+    // lifecycle rule, swept by EngineSweepSpec).
     val base = df.withColumn("__v", col(valueCol).cast("double"))
       .localCheckpoint(false)
     val bounds = base.agg(min(col("__v")).as("__mn"), max(col("__v")).as("__mx"))

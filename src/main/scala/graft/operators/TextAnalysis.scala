@@ -441,7 +441,7 @@ object TextAnalysis {
     // shared across all consumers with no persistence at all. NOT
     // cache() (un-unpersistable here — the result is consumed lazily —
     // so it would pin a CacheManager entry per call until session end:
-    // the historical lexicalTopK leak, swept by CacheLifecycleSpec) and
+    // the historical lexicalTopK leak, swept by EngineSweepSpec) and
     // NOT localCheckpoint (under AQE, building the checkpoint RDD
     // materializes every shuffle stage — plan building would run jobs,
     // the Round5PlanSpec pin). Callers who want an explicitly
@@ -488,7 +488,7 @@ object TextAnalysis {
     // each side's subtree ends in the term-frequency aggregation's
     // exchange, so ReuseExchange materializes the expensive
     // tokenize/explode scan once per side — no CacheManager pin (the
-    // lexicalTopK leak, swept by CacheLifecycleSpec) and no
+    // lexicalTopK leak, swept by EngineSweepSpec) and no
     // localCheckpoint (under AQE the checkpoint RDD's construction
     // materializes every shuffle stage, so plan building would run
     // jobs — the Round5PlanSpec pin). REPEATED callers (probe loops,

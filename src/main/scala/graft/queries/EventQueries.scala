@@ -100,7 +100,7 @@ object EventQueries {
     // the average is a bounded array fold over the date spine
     // (gapFillMovingAvg) rather than an unpartitioned window, so the
     // engine plans ZERO no-partition WindowExecs and that warning stays
-    // a trustworthy regression signal (Round6PlanSpec pins this)
+    // a trustworthy regression signal (EngineSweepSpec pins this)
     "q_ts_gapfill" -> { (s, dir) =>
       Events.gapFillMovingAvg(
           Events.gapFillDaily(Sources.table(s, dir, "orders"),

@@ -52,7 +52,7 @@ class Round14Spec extends SparkSpec {
       assert(!p.contains("CartesianProduct"), s"$q:\n$p")
       // the bucket composition's distributedNtile broadcasts its 1-row
       // global bounds (the q_decile_stats pattern, allowlisted in
-      // Round3PlanSpec) — the KN ladder itself must stay NLJ-free
+      // EngineSweepSpec) — the KN ladder itself must stay NLJ-free
       if (q != "q_ccnet_kn_buckets")
         assert(!p.contains("BroadcastNestedLoopJoin"), s"$q:\n$p")
       // every per-order lookup (gram, context rollup, continuation) is

@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session base: one SparkSession per JVM (getOrCreate), suites
-  * reuse it. */
-trait SparkSpec extends AnyFunSuite {
+/** The one test session: every suite and property in the test JVM
+  * shares it (getOrCreate), whichever runs first. */
+object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[8]")
@@ -18,6 +19,17 @@ trait SparkSpec extends AnyFunSuite {
     graft.functions.GraftFunctions.register(s)
     s
   }
+}
+
+/** Shared session base: suites reuse [[SparkSpec.spark]], and each
+  * leaves the shared CacheManager empty when it ends, so a test-side
+  * `cache()` never reaches the next suite (EngineSweepSpec asserts a
+  * clean cache before its sweep, whatever the suite order). */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+  lazy val spark: SparkSession = SparkSpec.spark
+
+  override protected def afterAll(): Unit =
+    try spark.catalog.clearCache() finally super.afterAll()
 
   def sf0001 = "/root/testdata/sf0.001"
   def sf001 = "/root/testdata/sf0.01"

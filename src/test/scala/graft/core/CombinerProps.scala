@@ -16,7 +16,7 @@ object CombinerProps extends Properties("Combiner") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(20)
 
-  private lazy val spark = WordCountProps.spark
+  private lazy val spark = graft.SparkSpec.spark
 
   private val pairsGen: Gen[List[(Int, Long)]] =
     Gen.listOf(Gen.zip(Gen.choose(0, 6), Gen.choose(-50L, 50L)))

@@ -9,15 +9,7 @@ import org.scalacheck.{Gen, Prop, Properties}
   */
 object WordCountProps extends Properties("WordCount") {
 
-  private[graft] lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.SparkSpec.spark
 
   private val lineGen: Gen[String] =
     Gen.listOf(Gen.oneOf("a", "b", "cc", "d e", " ")).map(_.mkString(" "))

@@ -322,6 +322,34 @@ class EdgeCasesSpec extends SparkSpec {
     }
   }
 
+  test("top-k cosine operators rank a zero-norm neighbour last, with a " +
+      "NULL score and no exception") {
+    // vec_id 1 is all zeros; 2 and 3 score 0.666667 against each other
+    val emb = embOf((1L, zero), (2L, vec), (3L, vec.reverse))
+    // doc 1's only term has weight 0 (a term in every doc has idf 0)
+    val wc = Seq((1L, "x", 0L), (2L, "x", 5L), (2L, "y", 3L)).toDF("id", "term", "w")
+    val wq = Seq((10L, "x", 5L), (10L, "y", 3L)).toDF("id", "term", "w")
+    // (operator, result, query whose ranking is checked, expected ranking)
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame, Long, Seq[Long])] = Seq(
+      ("bruteForceTopK", () => Similarity.bruteForceTopK(emb, 2, every = 1L), 2L, Seq(3L, 1L)),
+      ("ivfTopKWithCentroids", () =>
+        Similarity.ivfTopKWithCentroids(emb, 2, unitCentroid, 1, every = 1L), 2L, Seq(3L, 1L)),
+      ("knnJoinWithCentroids", () => Similarity.knnJoinWithCentroids(
+        embOf((10L, vec), (11L, zero)), emb, 3, unitCentroid, 1), 10L, Seq(2L, 3L, 1L)),
+      ("lexicalCrossTopKFromWeights", () =>
+        Retrieval.lexicalCrossTopKFromWeights(wq, wc, 2), 10L, Seq(2L, 1L)))
+    cases.foreach { case (op, run, query, ranking) =>
+      val rows = run().collect()
+      val got = rows.filter(_.getLong(0) == query).sortBy(_.getInt(2))
+      assert(got.map(_.getLong(1)).toSeq === ranking, s"$op: ${rows.mkString(", ")}")
+      assert(!got.init.exists(_.isNullAt(3)) && got.last.isNullAt(3),
+        s"$op: ${got.mkString(", ")}")
+    }
+    val cos = Seq(1).toDF("i").select(
+      Similarity.cosine(typedLit(zero), typedLit(vec)).as("c")).collect()
+    assert(cos.head.isNullAt(0))
+  }
+
   test("simHashBlocks refuses maxHamming = 60: its blocks would be 0 bits " +
       "wide and match every pair") {
     val sig = Seq((1L, 5L)).toDF("id", "simhash")

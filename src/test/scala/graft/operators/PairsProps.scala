@@ -15,7 +15,7 @@ object PairsProps extends Properties("Pairs") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(20)
 
-  private lazy val spark = graft.core.WordCountProps.spark
+  private lazy val spark = graft.SparkSpec.spark
 
   private def orNull(g: Gen[Int]): Gen[Option[Int]] =
     Gen.frequency(8 -> g.map(Some(_)), 1 -> Gen.const(None))

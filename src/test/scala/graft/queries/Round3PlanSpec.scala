@@ -36,111 +36,6 @@ class Round3PlanSpec extends SparkSpec {
     assert(p.contains("*("), p) // WholeStageCodegen span covers the projection
   }
 
-  test("no query plans a CartesianProduct; nested-loop joins only where intended") {
-    // intentional BroadcastNestedLoopJoin users: non-equi conditions
-    // against a broadcast SINGLE-ROW (or dimension-sized) side — the
-    // documented pattern for global bounds and interval tables
-    val bnljAllowed = Set(
-      "q_range_join",        // broadcast interval table, non-equi
-      "q_asof_join",         // as-of over broadcast quotes side
-      "q_asof_join_2table",  // as-of two-table form
-      "q_histogram",         // broadcast 1-row global bounds
-      "q_zorder_layout",     // broadcast 1-row min/max rank bounds
-      "q_triangle_count",    // broadcast 1-row avg threshold + stat rows
-      "q_cooccurrence_lift", // broadcast 1-row user count
-      "q_mix_rebalance",     // broadcast 1-row token target
-      "q_temperature_mix",   // broadcast 1-row token target (same shape)
-      "q_curation_v2",       // same 1-row token target inside its mix stage
-      "q_target_mix",        // broadcast 1-row achievable-total (same shape)
-      "q_market_share",      // broadcast 1-row denominator
-      "q_promo_revenue",     // broadcast 1-row denominator
-      "q_curation_summary",  // stratum target inside mix rebalance
-      "q_above_nation_avg",  // broadcast 1-row global average
-      "q_correlated_subquery",
-      "q_unigram_logprob",   // broadcast 1-row corpus token total
-      "q_bigram_logprob",    // broadcast 1-row vocab size (same pattern)
-      "q_label_balance",     // broadcast 1-row minority-class count
-      "q_decayed_engagement",// broadcast 1-row reference timestamp
-      "q_decile_stats",      // broadcast 1-row global bounds (distributedNtile)
-      // round-5: corpus count / avgdl / df-cap resolved IN-PLAN as
-      // broadcast 1-row aggregates (replacing driver-side count()
-      // actions at plan build — the 100x-vocabulary fix)
-      "q_tfidf",                    // broadcast 1-row corpus count
-      "q_tfidf_cosine_incremental", // broadcast 1-row corpus count + cap
-      "q_bm25_score",               // broadcast 1-row (N, avgdl)
-      "q_dsir_weights",             // broadcast 1-row (T, R) totals
-      "q_dsir_resample",            // same totals feeding the top-k
-      "q_temporal_split",           // broadcast 1-row quantile cutoff
-      // broadcast k-row centroid table: the >32-cell assignment path
-      // (Clustering.LiteralArgminMax scaladoc) — bounded by nCells
-      "q_ann_ivf_topk_wide",
-      // exact all-pairs ORACLE BASELINES — documented as such; the
-      // scale paths are the LSH/IVF variants (SCALE.md "Known tradeoffs")
-      "q_ann_bruteforce_topk",
-      "q_embedding_neardup_exact",
-      // ADC scans: every (query, codes-row) pair scored — by design the
-      // pair side is the 32x-compressed codes table and each pair costs
-      // `subspaces` LUT lookups; pqTopK is guardSize'd, the persisted
-      // form scans stored codes. Candidate PRUNING is the IVF-PQ
-      // composition (q_ann_ivfpq_topk — equi-join on cell, NOT listed)
-      "q_ann_pq_topk",
-      "q_pq_incremental_persisted",
-      // round-7: drift binning broadcasts the 1-row cutpoint array and
-      // the 1-row totals (Drift scaladoc — every post-scan object is
-      // ≤ nBins rows); categorical/embedding variants broadcast the
-      // 1-row totals over the category/cell counts
-      "q_drift_numeric", "q_drift_bins", "q_drift_categorical",
-      "q_drift_embedding", "q_drift_profile_persisted", "q_drift_daily",
-      "q_drift_profile_approx",
-      // recall audit composes the allowlisted brute-force baseline as
-      // its exact side (bounded query sample by guardSize); the
-      // round-14 twin grades the k-means||-trained IVF against the
-      // same brute-force truth side
-      "q_ann_recall", "q_ann_kmeanspar_recall",
-      // round-11: the IR audit triple composes the same brute-force
-      // truth side (guardSize-bounded); the metrics joins themselves
-      // are equi-joins on (query_id, neighbor_id)
-      "q_retrieval_metrics",
-      // round-7d: the Matryoshka audit composes TWO brute-force
-      // baselines (full-dim and prefix-dim), both guardSize-bounded
-      "q_matryoshka_recall",
-      // round-7d: the lexical legs reuse tfIdf's / tfidfCorpusModel's
-      // one-row corpus-count cross join (the scalar-broadcast idiom —
-      // BuildRight over a 1-row aggregate, same as q_tfidf)
-      "q_hybrid_rrf", "q_hybrid_cross_rrf",
-      // calibration and the CCNet bucket splits run distributedNtile —
-      // 1-row global bounds (the q_decile_stats pattern); the round-14
-      // twin buckets the 5-gram KN score through the same ntile
-      "q_lr_calibration", "q_ccnet_buckets", "q_ccnet_kn_buckets",
-      // bounded 64-row negative pool broadcast with an inequality
-      // condition (anchors × pool, pool size fixed by TakeOrdered)
-      "q_negative_pool",
-      // round-10: heavyHittersFromState joins the 1-row exact total
-      // onto the ≤tracked-row candidate counts (the scalar-broadcast
-      // idiom — the one-shot q_heavy_hitters instead threads the total
-      // through its own sketch aggregate, no cross join)
-      "q_heavy_hitters_incremental",
-      // round-11: temperatureMix's 1-row tmin broadcast onto the
-      // per-lang totals (the q_temperature_mix scalar-broadcast idiom,
-      // reused by the v3 composition; Round11Spec pins the rest of the
-      // plan — bounded-frame broadcasts only, no token-stream shuffle)
-      "q_curation_v3",
-      // round-13: k-means|| above the 32-literal codegen cap scores
-      // via a broadcast of the BOUNDED candidate table (O(l·rounds)
-      // rows, corpus-independent) + min(struct) aggregation — the
-      // documented join formulation at Clustering.LiteralArgminMax;
-      // the "cross" join is row × bounded-candidates, never row × row
-      "q_kmeanspar_init_wide", "q_kmeanspar_assign_wide")
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val p = plan(name)
-      val cart = if (p.contains("CartesianProduct")) Seq(s"$name: CartesianProduct") else Nil
-      val bnlj = if (p.contains("BroadcastNestedLoopJoin") && !bnljAllowed.contains(name))
-        Seq(s"$name: BroadcastNestedLoopJoin") else Nil
-      cart ++ bnlj
-    }
-    assert(offenders.isEmpty, s"unintended join strategies:\n${offenders.mkString("\n")}")
-  }
-
   test("cumulative users: keyed aggregations are partial+final (map-side combine)") {
     // the full-row shuffle count stays at two regardless of event
     // volume (round 5 replaced the day-level window with a bounded

@@ -182,7 +182,7 @@ class Round5PlanSpec extends SparkSpec {
     val p = plan("q_ann_ivfpq_topk")
     // candidate pruning is a hash equi-join on the probed cell — never
     // an ADC scan of the whole corpus (that shape is the two allowed
-    // BNLJ baselines in Round3PlanSpec's sweep)
+    // BNLJ baselines in EngineSweepSpec's allow-list)
     assert(p.contains("BroadcastHashJoin [cell"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("CartesianProduct"), p)

@@ -2,27 +2,14 @@ package graft.queries
 
 import graft.SparkSpec
 import graft.SparkEntry
-import org.apache.spark.sql.catalyst.plans.logical.Window
 
-/** Plan-shape pins for the round-6 operators, plus the engine-wide
-  * zero-unpartitioned-window invariant that makes WindowExec's
-  * "No Partition Defined" warning a trustworthy regression signal. */
+/** Plan-shape pins for the round-6 operators (the engine-wide
+  * zero-unpartitioned-window invariant is checked in [[EngineSweepSpec]]). */
 class Round6PlanSpec extends SparkSpec {
 
   private def exec(name: String): String =
     SparkEntry.queries(name)(spark, sf0001)
       .queryExecution.executedPlan.toString
-
-  test("NO query plans an unpartitioned Window — engine-wide sweep") {
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
-      SparkEntry.queries(name)(spark, sf0001)
-        .queryExecution.optimizedPlan
-        .collect { case w: Window if w.partitionSpec.isEmpty => w }
-        .nonEmpty
-    }
-    assert(offenders.isEmpty,
-      s"unpartitioned windows (single-partition funnels) in: ${offenders.mkString(", ")}")
-  }
 
   test("rollup/cube: one Expand pass, aggregation partial+final") {
     for (q <- Seq("q_rollup_revenue", "q_cube_orders")) {

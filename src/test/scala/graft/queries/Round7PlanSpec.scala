@@ -2,58 +2,10 @@ package graft.queries
 
 import graft.SparkSpec
 import graft.SparkEntry
-import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo}
-import org.apache.spark.sql.catalyst.plans.logical.Join
 
-/** Round-7 engine-wide join-shape sweep — the second standing invariant
-  * next to Round6PlanSpec's zero-unpartitioned-window sweep: no query
-  * may plan a cartesian product or nested-loop join over UNBOUNDED
-  * sides. Every join must either carry an equality predicate (hash /
-  * sort-merge / broadcast-hash joinable — the bucketed candidate
-  * generation discipline) or have at least one side Catalyst can PROVE
-  * small (`maxRows`: a global aggregate's 1 row, a `limit(k)` pool, a
-  * literal spine) — the scalar-broadcast idiom, whose physical form is
-  * a BroadcastNestedLoopJoin over one row and is exactly what the
-  * `q_temporal_split` pin asserts FOR.
-  *
-  * This turns the per-query pins (edit-distance no-nested-loop, ANN
-  * broadcast-probe, …) into a regression gate over EVERY oracled query:
-  * a future operator that quietly introduces an n×m all-pairs join
-  * fails here by name before it ever reaches the bench. */
+/** Plan-shape pin for the round-7 composition (the engine-wide
+  * join-shape invariant is checked in [[EngineSweepSpec]]). */
 class Round7PlanSpec extends SparkSpec {
-
-  /** Sides provably at or under this many rows are broadcast-sized by
-    * construction (the largest bounded pool in the engine is the
-    * 64-row negative-sampling pool; 100k leaves headroom while still
-    * refusing any table-scan-shaped side). */
-  private val BoundedSideRows = 100000L
-
-  /** The labeled O(n²) oracle baselines — refused at runtime above a
-    * row cap (`Similarity.guardSize`); they exist precisely to oracle
-    * the bucketed operators against ground truth, and their all-pairs
-    * shape is the documented point. */
-  private val guardedBaselines = Set("q_embedding_neardup_exact")
-
-  test("engine-wide: every join is equi-keyed or has a provably bounded side") {
-    val offenders = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(guardedBaselines).flatMap { name =>
-      val plan = SparkEntry.queries(name)(spark, sf0001)
-        .queryExecution.optimizedPlan
-      val bad = plan.collect {
-        case j: Join =>
-          val hasEqui = j.condition.exists(_.exists {
-            case _: EqualTo | _: EqualNullSafe => true
-            case _ => false
-          })
-          val bounded =
-            j.children.exists(_.maxRows.exists(_ <= BoundedSideRows))
-          if (hasEqui || bounded) None else Some(j.simpleString(60))
-      }.flatten
-      if (bad.isEmpty) None else Some(s"$name: ${bad.mkString("; ")}")
-    }
-    assert(offenders.isEmpty,
-      s"unbounded non-equi joins in:\n${offenders.mkString("\n")}")
-  }
 
   test("pipeline_e2e: composition adds no exchanges beyond the component sum") {
     val p = SparkEntry.queries("q_pipeline_e2e")(spark, sf0001)

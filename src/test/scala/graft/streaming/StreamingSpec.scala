@@ -544,7 +544,7 @@ class StreamingSpec extends SparkSpec {
       assert(oneShot.nonEmpty, "planted near-dups should cross the split")
     } finally {
       q.stop()
-      // un-unpersisted test caches poison CacheLifecycleSpec's
+      // un-unpersisted test caches poison EngineSweepSpec's
       // dirty-before-sweep precondition when suite order varies
       batchSigs.unpersist()
     }
