@@ -52,7 +52,8 @@ object GraftFunctions {
     fn("winnow_fps", classOf[WinnowFpsExpr], WinnowFps.build),
     fn("kgram_hashes", classOf[KgramHashesExpr], WinnowFps.buildKgramHashes),
     fn("pq_encode", classOf[PqEncodeExpr], PqOps.buildEncode),
-    fn("pq_adc_lut", classOf[PqAdcLutExpr], PqOps.buildAdcLut))
+    fn("pq_adc_lut", classOf[PqAdcLutExpr], PqOps.buildAdcLut),
+    fn("band_keys", classOf[BandKeysExpr], BandKeys.build))
 
   /** Install [[table]] into a session built without [[graft.GraftExtensions]],
     * so SQL text can name the functions. Names the registry already has
@@ -135,6 +136,12 @@ object GraftFunctions {
     * never emit). Scoring a pair then costs `subspaces` array lookups. */
   def pqAdcLut(q: Column, codebooks: Seq[Seq[(Int, Seq[Double])]]): Column =
     column(PqAdcLutExpr(expression(q), PqModel.fromCodebooks(codebooks)))
+
+  /** [[BandKeysExpr]]: the `bands` LSH band keys of an `array<bigint>`
+    * or `array<int>` signature of (at least) `numHashes` elements, each
+    * band's `numHashes / bands` values joined with `sep`. */
+  def bandKeys(sig: Column, numHashes: Int, bands: Int, sep: String): Column =
+    column(BandKeysExpr(expression(sig), numHashes, bands, sep))
 
   // ---- SQL builders (the [[table]] entries that parse literals) ----
 

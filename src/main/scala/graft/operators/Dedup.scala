@@ -988,21 +988,16 @@ object Dedup {
   }
 
   /** Explode a signature table (id, sig) into its LSH band index
-    * (id, band, band_key): band keys are the concatenated slice values
-    * (collision-free — see [[minHashLshPairs]]). This IS the persisted
+    * (id, band, band_key): band keys are the ":"-joined slice values
+    * (collision-free — see [[minHashLshPairs]]), formed by one native
+    * [[graft.functions.BandKeysExpr]] loop. This IS the persisted
     * artifact of a production LSH deployment: write it once for the
     * corpus (bucketed on band_key, so each ingest batch band-joins
     * without shuffling the index — [[Sinks.writeBucketed]]), and append
     * each batch's bands after deduplicating it. */
-  def bandedSignatures(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    sigs.select(col("id"), posexplode(
-      array((0 until bands).map(bi =>
-        concat_ws(":", (0 until r).map(j =>
-          element_at(col("sig"), bi * r + j + 1).cast("string")): _*)): _*))
-      .as(Seq("band", "band_key")))
-  }
+  def bandedSignatures(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    sigs.select(col("id"), posexplode(graft.functions.GraftFunctions
+      .bandKeys(col("sig"), numHashes, bands, ":")).as(Seq("band", "band_key")))
 
   /** Estimated Jaccard between two signature columns: the fraction of
     * agreeing positions. */

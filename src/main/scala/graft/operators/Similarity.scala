@@ -190,16 +190,9 @@ object Similarity {
     * p = 1 − acos(s)/π). */
   def srpBandedSignatures(emb: DataFrame, dim: Int, nBits: Int = 32,
       bands: Int = 8, seed: Long = 42L): DataFrame = {
-    require(nBits % bands == 0)
-    val r = nBits / bands
-    val sigged = emb.select(col("vec_id"),
-      srpSignature(col("embedding").cast("array<double>"), nBits, dim, seed)
-        .as("sig"))
-    sigged.select(col("vec_id"), posexplode(
-      array((0 until bands).map(bi =>
-        concat((0 until r).map(j =>
-          element_at(col("sig"), bi * r + j + 1).cast("string")): _*)): _*))
-      .as(Seq("band", "band_key")))
+    val sig = srpSignature(col("embedding").cast("array<double>"), nBits, dim, seed)
+    emb.select(col("vec_id"), posexplode(graft.functions.GraftFunctions
+      .bandKeys(sig, nBits, bands, "")).as(Seq("band", "band_key")))
   }
 
   /** Incremental SRP-LSH near-dup against a PERSISTED band index: the

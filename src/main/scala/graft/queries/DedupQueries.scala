@@ -364,14 +364,16 @@ object DedupQueries {
     // the PRODUCT STORY in one plan: quality filter → line dedup →
     // near-dup clusters → leakage-safe split → sequence packing, each
     // stage the already-oracled operator, composed documents-to-
-    // training-chunks with no materialization barrier between stages.
-    // Catalyst sees the WHOLE pipeline, so column pruning crosses stage
-    // boundaries (the gopher stage's rule columns never survive past
-    // `keep`) and the exchanges in the executed plan are exactly the
-    // component sum — no stage pays a handoff shuffle (pinned in
-    // Round7PlanSpec). Output: per-split corpus accounting (docs,
-    // clusters, packed chunks, tokens) — the dashboard row a data-prep
-    // run publishes.
+    // training-chunks. One materialization barrier: the deduped text
+    // feeds three consumers (the near-dup shingles, the cluster id set
+    // and the packer), so it is pinned once with a lazy localCheckpoint
+    // (the Dedup materialization policy) instead of each consumer
+    // re-running the gopher join and the line dedup. Downstream of it,
+    // Catalyst sees the rest of the pipeline whole and no stage pays a
+    // handoff shuffle; the sink reads the pinned blocks, never the
+    // documents parquet (both pinned in Round7PlanSpec). Output:
+    // per-split corpus accounting (docs, clusters, packed chunks,
+    // tokens) — the dashboard row a data-prep run publishes.
     "q_pipeline_e2e" -> { (s, dir) =>
       val docs = table(s, dir, "documents")
       // 1. Gopher/C4 quality battery, keep survivors only. The
@@ -384,10 +386,12 @@ object DedupQueries {
             "text", minStopHits = 1L)
           .filter(col("keep") === 1).select("doc_id"),
         Seq("doc_id"))
-      // 2. corpus-level line dedup over the 8-word reflow
+      // 2. corpus-level line dedup over the 8-word reflow, pinned once
+      //    for its three consumers
       val deduped = Dedup.lineLevelDedup(reflowLines(curated),
           "doc_id", "text_lines", minChars = 10)
         .select(col("id").as("doc_id"), col("text_dedup"))
+        .localCheckpoint(false)
       // 3. near-dup clusters on the DEDUPED text (lossless prefix
       //    filter; the dedup may change shingles, so clustering runs
       //    downstream of it, as a real pipeline would)
@@ -416,12 +420,14 @@ object DedupQueries {
     // dedup → SEMANTIC dedup (trained k-means cells + within-cell
     // cosine, drop the higher id of each >= 0.4 pair) → √-temperature
     // language mix → token-balanced training shards. Stages chain
-    // lazily except the two documented model boundaries (the Lloyd
-    // trainer collects O(k·dim) centroids; the survivors' embedding
-    // projection is localCheckpoint'ed once so the 3 training scans
-    // don't re-run the doc-filter chain — at 100 TB that projection is
-    // a persisted table feeding the trainer). Exchange budget pinned
-    // in Round10Spec. Output: the per-shard corpus accounting row.
+    // lazily except the documented boundaries: the deduped text is
+    // pinned once for its two consumers (the survivors' embeddings and
+    // the token accounting), the Lloyd trainer collects O(k·dim)
+    // centroids, and the survivors' embedding projection is
+    // localCheckpoint'ed once so the 3 training scans don't re-run the
+    // doc-filter chain — at 100 TB that projection is a persisted table
+    // feeding the trainer. Exchange budget pinned in Round10Spec.
+    // Output: the per-shard corpus accounting row.
     "q_curation_v2" -> { (s, dir) =>
       val docs = table(s, dir, "documents")
       val emb = table(s, dir, "embeddings")
@@ -437,10 +443,13 @@ object DedupQueries {
             "text", Seq("dup", "noise", "Vector"), maxFrac = 0.05)
           .filter(col("keep") === 1).select("doc_id"),
         Seq("doc_id"))
-      // 3. corpus-level line dedup over the 8-word reflow of survivors
+      // 3. corpus-level line dedup over the 8-word reflow of survivors,
+      //    pinned once: the embedding boundary below materializes it and
+      //    the token accounting reads the same blocks
       val deduped = Dedup.lineLevelDedup(reflowLines(screened),
           "doc_id", "text_lines", minChars = 10)
         .select(col("id").as("doc_id"), col("text_dedup"))
+        .localCheckpoint(false)
       // 4. SemDeDup over the SURVIVORS' embeddings (id namespace is
       //    shared with documents): keep the lowest id of each >= 0.4
       //    within-cell pair — the greedy-by-pairs representative rule

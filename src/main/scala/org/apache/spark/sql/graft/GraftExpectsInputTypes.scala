@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType}
   * ClassCastException or codegen compile failure.
   *
   * Concrete `DataType`s cover every graft expression (strings, longs,
-  * `array<double>`); none needs the abstract type-collection forms
-  * (`TypeCollection`, `NumericType`), so nothing private leaks into the
-  * graft-facing signature. */
+  * `array<double>`) but `band_keys`, which takes an `array<int>` or an
+  * `array<bigint>` and checks that itself; none needs the abstract
+  * type-collection forms (`TypeCollection`, `NumericType`), so nothing
+  * private leaks into the graft-facing signature. */
 trait GraftExpectsInputTypes extends ExpectsInputTypes {
 
   /** The expected concrete input types, one per child. */

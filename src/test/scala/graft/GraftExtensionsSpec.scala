@@ -53,8 +53,8 @@ class GraftExtensionsSpec extends SparkSpec {
   test("one query per native function runs in a fresh session, rows as in the shared one") {
     // every Scala-side use of a native function, by query:
     // rolling_hash, char_entropy, count_in, nfc_normalize, bloom_agg +
-    // bloom_probe, chunk_ids, bfd_bin_ids (+ minhash_agg), minhash_agg,
-    // winnow_fps, kgram_hashes, char_ngram_features + vector_dot,
+    // bloom_probe, chunk_ids, bfd_bin_ids (+ minhash_agg), minhash_agg +
+    // band_keys, winnow_fps, kgram_hashes, char_ngram_features + vector_dot,
     // pq_encode + pq_adc_lut
     val queries = Seq("q_fingerprint", "q_char_entropy", "q_lang_id",
       "q_text_normalize", "q_bloom_semi_join", "q_chunk_sentences",
@@ -71,7 +71,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("register installs every table entry; a second call is a no-op") {
-    assert(names.size === 16 && names.distinct.size === 16)
+    assert(names.size === 17 && names.distinct.size === 17)
     val fresh = freshSession()
     val registry = fresh.sessionState.functionRegistry
     GraftFunctions.register(fresh)
@@ -154,6 +154,11 @@ class GraftExtensionsSpec extends SparkSpec {
       h1 * 1000000007L + h2
     }
     assert(khs === Seq(poly("abc"), poly("bcd")))
+    // band_keys: r = 2 values per key, the null element skipped
+    val keys = spark.sql(
+      "SELECT band_keys(array(1L, -2L, CAST(NULL AS BIGINT), 4L), 4, 2, ':') AS k")
+      .collect().head.getSeq[String](0)
+    assert(keys === Seq("1:-2", "4"))
     // deliberately NOT stopping: the SparkContext is shared with the
     // other suites in this JVM
   }

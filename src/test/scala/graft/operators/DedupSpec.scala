@@ -463,6 +463,15 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("bandedSignatures: generated code does not grow with numHashes") {
+    val banded = Dedup.bandedSignatures(
+      Dedup.minHashSignatures(Dedup.shingles(docs, "doc_id", "text", 3), 128), 128, 32)
+    banded.collect() // AQE plans its whole-stage classes as stages run
+    val lines = banded.queryExecution.debug.codegenToSeq()
+      .map(_._2.linesIterator.size)
+    assert(lines.nonEmpty && lines.max < 1000, s"whole-stage class lines: $lines")
+  }
+
   test("simhash block index lifecycle: append a batch, grown index == recompute") {
     import graft.sources.Sinks
     import org.apache.spark.sql.functions.col
