@@ -42,10 +42,6 @@ object Parallelism {
   def fanOut(df: DataFrame): DataFrame =
     if (shouldFanOut(df)) df.repartition(target(df)) else df
 
-  /** Typed twin of [[fanOut]] (Dataset.repartition preserves T). */
-  def fanOutDs[T](ds: Dataset[T]): Dataset[T] =
-    if (shouldFanOut(ds)) ds.repartition(target(ds)) else ds
-
   /** [[fanOut]]'s mirror image for the WRITE side of a bucketed table:
     * fan a tiny input IN to exactly `numBuckets` hash partitions on the
     * bucket columns. A bucketed write emits one file per (task, bucket)

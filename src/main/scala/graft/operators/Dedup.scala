@@ -50,25 +50,12 @@ object Dedup {
 
   /** Distinct word n-gram shingles per row: (id, shingle). Tokens are
     * materialized per row before n-gramming (see TextAnalysis.wordNgrams
-    * scaladoc — the fused expression re-tokenizes per element).
-    *
-    * `fan = true` fans tiny single-split inputs out first
-    * ([[graft.core.Parallelism.fanOut]]); it is OPT-IN because the
-    * round-16 driver bench proved the criterion both ways: the fanned
-    * exchange pays only when heavy per-row CPU sits ABOVE it
-    * (minHashLshPairs' 128-minima hashing: 1.60x faster), and it
-    * actively hurts when the consumer is a checkpointed frame feeding
-    * an iterative loop (q_dedup_clusters went 3x SLOWER — the fan-out
-    * spread tiny checkpointed frames over defaultParallelism partitions
-    * and every CC round paid 32x the task overhead). Default off. */
-  def shingles(df: DataFrame, idCol: String, textCol: String, n: Int,
-      fan: Boolean = false): DataFrame = {
-    val in = df.select(col(idCol).as("id"), col(textCol).as("__txt"))
-    (if (fan) graft.core.Parallelism.fanOut(in) else in)
+    * scaladoc — the fused expression re-tokenizes per element). */
+  def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    df.select(col(idCol).as("id"), col(textCol).as("__txt"))
       .select(col("id"), TextAnalysis.tokens(col("__txt")).as("__toks"))
       .select(col("id"),
         explode(array_distinct(TextAnalysis.ngramsFromTokens(col("__toks"), n))).as("shingle"))
-  }
 
   /** Exact dedup by content fingerprint: one row per distinct (normalized)
     * text with the smallest surviving id and the duplicate count.
@@ -1034,10 +1021,17 @@ object Dedup {
     // checkpoint stores 128-long signature rows as deserialized
     // objects and re-reads them per consumer, where the shared shuffle
     // write is compressed and the post-shuffle agg is trivial)
-    // fan = true: the 128-minima hashing above the explode is the one
-    // shingle consumer whose per-row CPU repays the fan-out exchange
-    // (driver-verified 1.60x in round 16; see shingles' scaladoc)
-    val sigs = minHashSignatures(shingles(df, idCol, textCol, n, fan = true), numHashes)
+    // fanned out (graft.core.Parallelism.fanOut): the 128-minima
+    // hashing above the explode is the one shingle consumer whose
+    // per-row CPU repays the fan-out exchange (round-16 bench: 1.60x
+    // faster). The other shingle consumers stay single-split: the
+    // fan-out hurts a checkpointed frame feeding an iterative loop
+    // (q_dedup_clusters went 3x SLOWER — tiny checkpointed frames
+    // spread over defaultParallelism partitions, and every CC round
+    // paid 32x the task overhead)
+    val sigs = minHashSignatures(shingles(
+      graft.core.Parallelism.fanOut(df.select(col(idCol), col(textCol))),
+      idCol, textCol, n), numHashes)
     val banded = bandedSignatures(sigs, numHashes, bands)
     val cands = Pairs.self(banded, "id", Seq("band", "band_key"))
       .select("a", "b").distinct()

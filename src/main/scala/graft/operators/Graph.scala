@@ -265,10 +265,11 @@ object Graph {
     * cluster_rep = component minimum; isolated ids are their own rep. */
   def connectedComponentsAlternating(allIds: DataFrame, pairs: DataFrame,
       maxRounds: Int = 25): DataFrame = {
+    def canonEdges(df: DataFrame): DataFrame = df
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b")).distinct()
     def canonSig(df: DataFrame): (Long, Long) = {
-      val r = df
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b")).distinct()
+      val r = canonEdges(df)
         .agg(count(lit(1)), bit_xor(xxhash64(col("a"), col("b"))))
         .collect().head
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
@@ -300,9 +301,6 @@ object Graph {
       .select(col("a").cast("long").as("src"), col("b").cast("long").as("dst"))
       .where(col("src") =!= col("dst")).distinct()
       .localCheckpoint(true)
-    def canonEdges(df: DataFrame): DataFrame = df
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct()
     var prevSig = canonSig(edges)
     var round = 0
     var converged = edges.isEmpty

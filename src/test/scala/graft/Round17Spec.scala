@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 /** Round-17 invariants: the read-side fan-out is OPT-IN and confined to
   * the sites the driver bench proved it pays at (shingles only beneath
   * minhash; wordcount/bpe/tfidf/editdist plans carry NO round-robin
-  * exchange), fan = true is result-identical to fan = false, and
+  * exchange), shingles over a `fanOut` input are result-identical to
+  * the default ones, and
   * `Parallelism.fanIn` (round 16's bucketed-write fix, previously
   * untested — ADVICE item) lands a tiny bucketed table as exactly one
   * file per bucket while leaving non-tiny inputs untouched. */
@@ -18,13 +19,14 @@ class Round17Spec extends SparkSpec {
       "adds one on a tiny input and is result-identical") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val plain = graft.operators.Dedup.shingles(docs, "doc_id", "text", 3)
-    val fanned = graft.operators.Dedup.shingles(docs, "doc_id", "text", 3,
-      fan = true)
+    val fanned = graft.operators.Dedup.shingles(
+      graft.core.Parallelism.fanOut(docs.select(col("doc_id"), col("text"))),
+      "doc_id", "text", 3)
     assert(roundRobins(plain.queryExecution.executedPlan.toString) === 0,
       "default shingles must not fan out (the q_dedup_clusters CC-loop " +
         "regression class)")
     assert(roundRobins(fanned.queryExecution.executedPlan.toString) === 1,
-      "fan = true must fan a tiny single-split input out")
+      "fanOut must fan a tiny single-split input out")
     // repartition never changes row content — pin it anyway: the two
     // forms must stay interchangeable for minHashLshPairs to be safe
     val a = plain.orderBy("id", "shingle").collect().toSeq
