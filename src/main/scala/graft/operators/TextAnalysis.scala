@@ -983,11 +983,11 @@ object TextAnalysis {
         round(size(filter(col("__lines"), l =>
           l.endsWith("...") || l.endsWith("…")))
           .cast("double") / nL, 6))
+      // the stopwords are distinct, so the intersection's size is the
+      // number of stopwords present, over one lowercase pass
       .withColumn("n_stop_hits",
-        GopherStopwords.map(w =>
-          when(array_contains(transform(col("__toks"), lower _), w), 1L)
-            .otherwise(0L))
-          .reduce(_ + _))
+        size(array_intersect(transform(col("__toks"), lower _),
+          array(GopherStopwords.map(lit): _*))).cast("long"))
       .withColumn("keep",
         (col("n_words") >= minWords && col("n_words") <= maxWords &&
           col("mean_word_len") >= 3.0 && col("mean_word_len") <= 10.0 &&

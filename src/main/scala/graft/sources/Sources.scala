@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Sources — the engine's `datafn` equivalents.
   *
@@ -16,7 +18,7 @@ object Sources {
   /** Parquet table by name from a scale-factor directory
     * (`/root/testdata/sfN/name.parquet`). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   /** The `events` table with `ts` normalized to a session-TZ
     * `TimestampType` in microseconds, whatever the parquet writer chose:
@@ -28,11 +30,70 @@ object Sources {
     * generator has emitted both ns-as-int64 and µs variants across rounds,
     * so the reader adapts per file rather than assuming one. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // Session-wide and sticky: only affects parquet columns that ARE
-    // nanos-typed, i.e. only a nanos-encoded events.ts.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
+    readNanosAsLong(spark)
+    normalizeTs(parquet(spark, s"$dir/events.parquet"))
   }
+
+  /** Reads parquet TIMESTAMP(NANOS) columns as epoch-nanos longs, which
+    * [[normalizeTs]] then floors to µs. Session-wide and sticky: only
+    * affects parquet columns that ARE nanos-typed, i.e. only a
+    * nanos-encoded events.ts. */
+  private[graft] def readNanosAsLong(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+  /** The parquet reader behind [[table]], [[events]] and the streaming
+    * events schema. Spark infers a parquet input's schema with a Spark
+    * job on every `read.parquet`; here the schema it inferred is kept and
+    * passed back (`read.schema(s)`, no job) on later reads of the same
+    * input, as long as its files and the session's confs (inference
+    * depends on some, e.g. `nanosAsLong`) are unchanged. Only the schema
+    * is kept, never the DataFrame: every call builds a fresh relation, so
+    * two reads in a self-join keep distinct exprIds. A path that cannot
+    * be listed falls through to the plain read, so a missing input still
+    * fails with Spark's own `[PATH_NOT_FOUND]`. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(key) =>
+        Option(schemas.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.put(key, df.schema)
+            df
+        }
+    }
+
+  /** What an inferred schema depends on: the qualified path, every file
+    * under it as (path, length, mtime), and the session's confs. */
+  private final case class SchemaKey(path: String,
+      files: Vector[(String, Long, Long)], confs: Map[String, String])
+
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val it = fs.listFiles(p, true)
+      val files = Vector.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(SchemaKey(fs.makeQualified(p).toString, files.result(), spark.conf.getAll))
+    } catch {
+      case _: java.io.FileNotFoundException => None
+    }
+  }
+
+  /** Inputs whose schemas are kept; the oldest entry is evicted first. */
+  private val MaxSchemas = 256
+
+  /** Synchronized: `Retrieval.buildLegs` reads sources from two threads. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[SchemaKey, StructType]() {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SchemaKey, StructType]): Boolean = size > MaxSchemas
+    })
 
   /** Normalize an events-shaped frame's `ts` column to `TimestampType`
     * micros regardless of on-disk encoding (see [[events]]). */

@@ -21,12 +21,13 @@ object StreamingOps {
     * dir itself, NOT the sf dir — a file source globs every file under
     * its path, and sibling tables would surface as all-null rows), ts
     * normalized to micros exactly like the batch reader (Sources.events).
-    * The stream schema is taken from one batch footer read of the same
-    * path, so the stream adapts to whichever ts encoding the file uses
-    * (ns-as-int64 vs µs — both have occurred across testdata rounds). */
+    * The stream schema is the batch reader's for the same path (an
+    * inference job on the first read, the kept schema after), so the
+    * stream adapts to whichever ts encoding the file uses (ns-as-int64
+    * vs µs — both have occurred across testdata rounds). */
   def eventsStream(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(path).schema // footer-only, no scan
+    graft.sources.Sources.readNanosAsLong(spark)
+    val fileSchema = graft.sources.Sources.parquet(spark, path).schema
     graft.sources.Sources.normalizeTs(
       spark.readStream
         .schema(fileSchema)

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.JobCount
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions.{col, lit}
@@ -27,9 +28,10 @@ import org.apache.spark.sql.functions.{col, lit}
   *    like localCheckpoint(true) / trainCentroids / guard counts already
   *    runs Spark jobs) and EXECUTION (the noop-sink materialization the
   *    bench times); the median of `--runs` runs (default 3), then each
-  *    run's pair. A query whose time sits in construction is bounded by
-  *    the jobs it runs one after another, not by the plan its explain
-  *    shows.
+  *    run's pair with the number of Spark jobs its construction started
+  *    (`[construct+execute Nj]`). A query whose time sits in
+  *    construction is bounded by the jobs it runs one after another, not
+  *    by the plan its explain shows.
   *  - `--plans dir`: writes `<dir>/<query>.txt` with the query's
   *    `explain("formatted")` before it runs, then its post-AQE executed
   *    plan after `collect()`, so the join strategies and exchange counts
@@ -156,18 +158,20 @@ object Probe {
       runs: Int, tag: String): Double = {
     val rows = (1 to runs).map { _ =>
       cleanup(spark)
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, dir)
-      val t1 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
+      val ((df, t0, t1), jobs) = JobCount.during(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        (SparkEntry.queries(name)(spark, dir), t0, System.nanoTime())
+      }
       val t2 = System.nanoTime()
-      ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
+      df.write.format("noop").mode("overwrite").save()
+      val t3 = System.nanoTime()
+      ((t1 - t0) / 1e9, (t3 - t2) / 1e9, jobs)
     }
     val c = median(rows.map(_._1))
     val e = median(rows.map(_._2))
     println(f"$tag$name%-40s construct=$c%7.3fs execute=$e%7.3fs  " +
-      rows.map { case (a, b) => f"[$a%.2f+$b%.2f]" }.mkString(" "))
-    median(rows.map { case (a, b) => a + b })
+      rows.map { case (a, b, j) => f"[$a%.2f+$b%.2f ${j}j]" }.mkString(" "))
+    median(rows.map { case (a, b, _) => a + b })
   }
 
   private def dumpPlans(spark: SparkSession, name: String, dir: String,
