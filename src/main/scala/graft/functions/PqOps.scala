@@ -16,9 +16,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * CANNOT split them into sub-methods the way it can for interpreted
   * projections. At the 8×16 default the fused scan→encode→score→rank
   * stage blows Janino's 64 KB method cap and the WHOLE stage silently
-  * drops to interpreted execution (the same cliff as
-  * [[graft.operators.Clustering.LiteralArgminMax]], measured there as
-  * minutes-instead-of-seconds). These expressions generate a single
+  * drops to interpreted execution (the same cliff that caps the literal
+  * route of the nearest-centroid kernel, `graft.operators.Centroids`,
+  * measured there as minutes-instead-of-seconds). These expressions generate a single
   * method CALL against a referenced model object whose loops are
   * compiled Scala — a few dozen bytes of generated code regardless of
   * codebook size, which also lifts the practical codebook ceiling to

@@ -239,8 +239,9 @@ object Similarity {
     * vector is assigned to its nearest centroid by L2 distance (the
     * k-means criterion, ties toward the lower cell id); each query
     * probes the `nprobe` nearest cells and ranks only vectors in them —
-    * scoring ~nprobe/nCells of the corpus instead of all of it. */
-  /** `corpusFilter` restricts the NEIGHBOR side only (hybrid /
+    * scoring ~nprobe/nCells of the corpus instead of all of it.
+    *
+    * `corpusFilter` restricts the NEIGHBOR side only (hybrid /
     * metadata-filtered search: "top-k among label=2 vectors"): queries
     * still come from the full table, and the predicate is applied
     * BEFORE cell assignment, so it reaches the parquet scan as a
@@ -279,9 +280,9 @@ object Similarity {
     *
     * CONTRACT: `vec_id` is the row's IDENTITY and must be unique per
     * row on both sides — rank tie-breaks, self-exclusion, and the
-    * >[[Clustering.LiteralArgminMax]] broadcast-assignment path (which
-    * aggregates per id) all key on it; rows sharing an id would
-    * collapse into one pseudo-vector there.
+    * broadcast-join route of the cell assignment ([[Centroids.nearest]],
+    * which aggregates per id) all key on it; rows sharing an id would
+    * collapse into one pseudo-vector there. `nprobe` must be at least 1.
     *
     * The query batch is BROADCAST into every probed corpus cell, so it
     * must stay executor-memory-bounded: batches above `maxQueryRows`
@@ -308,61 +309,19 @@ object Similarity {
       "(e.g. by vec_id range or hash bucket) and call once per shard — " +
       "per-shard results are independent and concatenate — or raise " +
       "maxQueryRows deliberately for a cluster with the memory headroom.")
-    // squared L2 to each cell via the algebraic identity
-    // x·x − 2·x·c + ‖c‖² (clamped at 0): x·x computed once per row,
-    // each cell one fused native VectorDot — fully codegen'd (the
-    // interpreted zip_with fold was the probe's bottleneck at high k),
-    // and exactly the quantity the oracle orders by. Above
-    // Clustering.LiteralArgminMax cells the literal sort expression
-    // exceeds codegen limits (see that constant's scaladoc), so cell
-    // selection switches to the broadcast-join form: a tiny codegen'd
-    // expression per (row, cell) pair, then per-row top-m via a
-    // map-side-combined aggregation — the shape that scales to
-    // thousands of IVF cells. Both paths rank the identical quantity.
-    def withCells(df: DataFrame, m: Int): DataFrame =
-      if (centroids.size <= Clustering.LiteralArgminMax) {
-        val all = array(centroids.map { case (i, c) =>
-          val cc = c.foldLeft(0.0)((acc, x) => acc + x * x)
-          struct(greatest(col("__xx") - lit(2.0) *
-              graft.functions.GraftFunctions.vectorDot(col("emb_d"), typedLit(c)) + lit(cc),
-            lit(0.0)).as("d"), lit(i).as("cell"))
-        }: _*)
-        df.withColumn("__cells", slice(array_sort(all), 1, m))
-      } else {
-        import spark.implicits._
-        val cent = centroids.map { case (i, c) =>
-          (i, c, c.foldLeft(0.0)((acc, x) => acc + x * x))
-        }.toDF("__cid", "__c", "__cc")
-        val d2 = greatest(col("__xx") -
-          lit(2.0) * graft.functions.GraftFunctions.vectorDot(col("emb_d"), col("__c")) +
-          col("__cc"), lit(0.0))
-        // ties on (d, cell) are impossible (cell ids unique), so the
-        // trailing vector/norm fields are never compared — they ride
-        // along to avoid a second join
-        df.crossJoin(broadcast(cent))
-          .select(col("vec_id"),
-            struct(d2.as("d"), col("__cid").as("cell")).as("__s"),
-            struct(d2.as("d"), col("__cid").as("cell"),
-              col("emb_d").as("emb_d"), col("nrm").as("nrm")).as("__se"))
-          .groupBy(col("vec_id"))
-          .agg(slice(sort_array(collect_list(col("__s"))), 1, m).as("__cells"),
-            min(col("__se")).as("__m"))
-          .select(col("vec_id"), col("__m.emb_d").as("emb_d"),
-            col("__m.nrm").as("nrm"), col("__cells"))
-      }
-    def prep(df: DataFrame): DataFrame = df.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("emb_d"))
-      .withColumn("__xx", graft.functions.GraftFunctions.vectorDot(col("emb_d"), col("emb_d")))
-      .withColumn("nrm", sqrt(dot(col("emb_d"), col("emb_d"))))
     // prep AFTER any caller-side filter so predicates (on any metadata
     // column) are still resolvable and reach the scan
-    val assigned = withCells(prep(corpus), 1)
-      .select(col("vec_id"), col("emb_d"), col("nrm"),
-        element_at(col("__cells"), 1).getField("cell").as("cell"))
-    val probes = withCells(prep(queries), nprobe)
+    def prep(df: DataFrame): DataFrame = df.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("emb_d"))
+      .withColumn("nrm", sqrt(dot(col("emb_d"), col("emb_d"))))
+    val assigned = Centroids.nearest(prep(corpus), "emb_d", centroids, 1,
+        "vec_id", "emb_d", "nrm")
+      .select(col("vec_id"), col("emb_d"), col("nrm"), col("near")(0)("id").as("cell"))
+    val probes = Centroids.nearest(prep(queries), "emb_d", centroids, nprobe,
+        "vec_id", "emb_d", "nrm")
       .select(col("vec_id").as("query_id"), col("emb_d").as("q_emb"),
         col("nrm").as("q_nrm"),
-        explode(transform(col("__cells"), s => s.getField("cell"))).as("cell"))
+        explode(transform(col("near"), s => s.getField("id"))).as("cell"))
     val scored = assigned.join(broadcast(probes), Seq("cell"))
       .filter(if (excludeSameId) col("vec_id") =!= col("query_id") else lit(true))
       .withColumn("cos", Pairs.cosine(dot(col("q_emb"), col("emb_d")),
@@ -446,8 +405,8 @@ object Similarity {
     // no codegen cap here: encode/ADC run through the native PqOps
     // kernels (loops over a referenced model, not unrolled literals),
     // so the standard 256-entry codebooks of published PQ systems are
-    // fine; training itself switches to the broadcast-join path above
-    // Clustering.LiteralArgminMax
+    // fine; training itself switches to Centroids.nearest's
+    // broadcast-join route above its literal cap
     require(codesPerSubspace > 0, "codesPerSubspace must be positive")
     val sub = dim / subspaces
     val pool = java.util.concurrent.Executors.newFixedThreadPool(subspaces)
@@ -589,55 +548,22 @@ object Similarity {
 
   /** Encode vectors to (vec_id, cell, codes): the IVF-PQ index row —
     * coarse cell for candidate pruning, PQ codes for compressed
-    * scoring. At or below [[Clustering.LiteralArgminMax]] cells the
-    * whole row is ONE shuffle-free codegen'd projection (cell argmin +
-    * `subspaces` code argmins over literals); above it, cell assignment
-    * takes [[Clustering.assign]]'s broadcast-join path and joins the
-    * codes projection by id — one bounded shuffle, the price of
-    * thousand-cell quantizers (in production both sides land in the
-    * same bucketed table, so the join cost is paid once at index-build,
-    * as `SimilaritySpec` pins path equality). */
+    * scoring. The cell is [[Centroids.nearest]]'s argmin and the codes
+    * are computed from the vector it carries: at or below the kernel's
+    * literal cap the whole row is ONE shuffle-free codegen'd projection;
+    * above it, one bounded shuffle (the kernel's min-aggregate), the
+    * price of thousand-cell quantizers. */
   def pqEncodeWithCells(emb: DataFrame,
       codebooks: Seq[Seq[(Int, Seq[Double])]],
       coarse: Seq[(Int, Seq[Double])], dim: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    require(coarse.nonEmpty, "pqEncodeWithCells needs coarse centroids")
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "pqEncodeWithCells needs non-empty codebooks")
-    if (coarse.size <= Clustering.LiteralArgminMax)
-      pqEncodeCellsLiteral(emb, codebooks, coarse, dim, idCol, vecCol)
-    else pqEncodeCellsJoin(emb, codebooks, coarse, dim, idCol, vecCol)
-  }
-
-  /** Literal-argmin form of [[pqEncodeWithCells]] — one shuffle-free
-    * projection (SimilaritySpec pins equality with the join form). */
-  private[operators] def pqEncodeCellsLiteral(emb: DataFrame,
-      codebooks: Seq[Seq[(Int, Seq[Double])]],
-      coarse: Seq[(Int, Seq[Double])], dim: Int, idCol: String,
-      vecCol: String): DataFrame = {
-    val e = col(vecCol).cast("array<double>")
-    val xx = graft.functions.GraftFunctions.vectorDot(e, e)
-    val cellCol = array_min(array(coarse.map { case (cid, c) =>
-      val cc = c.foldLeft(0.0)((a, x) => a + x * x)
-      struct(greatest(xx - lit(2.0) *
-          graft.functions.GraftFunctions.vectorDot(e, typedLit(c)) + lit(cc),
-        lit(0.0)).as("d2"), lit(cid).as("cell"))
-    }: _*)).getField("cell")
-    emb.select(col(idCol).as("vec_id"), cellCol.as("cell"),
-      pqCodesCol(e, codebooks, dim).as("codes"))
-  }
-
-  /** Broadcast-join form of [[pqEncodeWithCells]] for above-cap cell
-    * counts: [[Clustering.assign]]'s small-expression path, then the
-    * codes projection joined by id. */
-  private[operators] def pqEncodeCellsJoin(emb: DataFrame,
-      codebooks: Seq[Seq[(Int, Seq[Double])]],
-      coarse: Seq[(Int, Seq[Double])], dim: Int, idCol: String,
-      vecCol: String): DataFrame = {
-    val cells = Clustering.assign(emb, coarse, idCol, vecCol)
-      .select(col("vec_id"), col("cluster").as("cell"))
-    cells.join(pqEncode(emb, codebooks, dim, idCol, vecCol), Seq("vec_id"))
-      .select(col("vec_id"), col("cell"), col("codes"))
+    val rows = emb.select(col(idCol).as("vec_id"),
+      col(vecCol).cast("array<double>").as("e"))
+    Centroids.nearest(rows, "e", coarse, 1, "vec_id", "e")
+      .select(col("vec_id"), col("near")(0)("id").as("cell"),
+        pqCodesCol(col("e"), codebooks, dim).as("codes"))
   }
 
   /** ADC top-k over an IVF-PQ index: each query probes its `nprobe`
@@ -654,13 +580,8 @@ object Similarity {
       codebooks: Seq[Seq[(Int, Seq[Double])]],
       coarse: Seq[(Int, Seq[Double])], dim: Int, k: Int,
       nprobe: Int): DataFrame = {
-    require(coarse.nonEmpty, "pqAdcTopKCells needs coarse centroids")
-    // nprobe nearest cells per query — literal argsort below the
-    // codegen cap, broadcast-join + bounded sorted-prefix above it
-    // (same switch and identical ranked quantity as ivfTopKWithCentroids)
-    val probed = pqProbeCells(queries, coarse, nprobe,
-      literal = coarse.size <= Clustering.LiteralArgminMax)
-    val qPrepped = adcPrepQueries(probed, codebooks, dim)
+    val qPrepped = adcPrepQueries(pqProbeCells(queries, coarse, nprobe),
+      codebooks, dim)
     // each vector lives in exactly ONE cell and probe cells are
     // distinct per query, so (query, neighbor) pairs are unique — no
     // dedup needed before ranking
@@ -671,54 +592,15 @@ object Similarity {
   }
 
   /** The probe expansion of [[pqAdcTopKCells]]: (query_id, cell, q)
-    * rows — nprobe cells per query, nearest-first by full-dimension
-    * squared distance with ties toward the lower cell id. Both paths
-    * rank the identical quantity (SimilaritySpec pins set equality);
-    * `literal` picks the single-projection argsort (codegen-safe only
-    * below [[Clustering.LiteralArgminMax]] cells) vs the broadcast-join
-    * + bounded sorted-prefix aggregation that scales to thousands of
-    * cells. */
+    * rows — the `nprobe` nearest cells per query by full-dimension
+    * squared distance ([[Centroids.nearest]], ties toward the lower cell
+    * id). */
   private[operators] def pqProbeCells(queries: DataFrame,
-      coarse: Seq[(Int, Seq[Double])], nprobe: Int,
-      literal: Boolean): DataFrame = {
-    val spark = queries.sparkSession
-    val q0 = queries.select(col("query_id"),
-        col("q").cast("array<double>").as("q"))
-      .withColumn("__xx", graft.functions.GraftFunctions.vectorDot(col("q"), col("q")))
-    if (literal) {
-      val all = array(coarse.map { case (cid, c) =>
-        val cc = c.foldLeft(0.0)((a, x) => a + x * x)
-        struct(greatest(col("__xx") - lit(2.0) *
-            graft.functions.GraftFunctions.vectorDot(col("q"), typedLit(c)) + lit(cc),
-          lit(0.0)).as("d"), lit(cid).as("cell"))
-      }: _*)
-      q0.withColumn("cell", explode(transform(
-          slice(array_sort(all), 1, nprobe), s => s.getField("cell"))))
-        .select(col("query_id"), col("cell"), col("q"))
-    } else {
-      import spark.implicits._
-      val cent = coarse.map { case (i, c) =>
-        (i, c, c.foldLeft(0.0)((acc, x) => acc + x * x))
-      }.toDF("__cid", "__c", "__cc")
-      val d2 = greatest(col("__xx") - lit(2.0) *
-        graft.functions.GraftFunctions.vectorDot(col("q"), col("__c")) + col("__cc"),
-        lit(0.0))
-      // ties on (d, cell) impossible (cell ids unique), so the
-      // trailing q field is never compared — it rides along to avoid
-      // a second join
-      q0.crossJoin(broadcast(cent))
-        .select(col("query_id"),
-          struct(d2.as("d"), col("__cid").as("cell")).as("__s"),
-          struct(d2.as("d"), col("__cid").as("cell"), col("q").as("q"))
-            .as("__se"))
-        .groupBy(col("query_id"))
-        .agg(slice(sort_array(collect_list(col("__s"))), 1, nprobe)
-          .as("__cells"), min(col("__se")).as("__m"))
-        .select(col("query_id"), col("__m.q").as("q"),
-          explode(transform(col("__cells"), s => s.getField("cell")))
-            .as("cell"))
-        .select(col("query_id"), col("cell"), col("q"))
-    }
+      coarse: Seq[(Int, Seq[Double])], nprobe: Int): DataFrame = {
+    val q = queries.select(col("query_id"), col("q").cast("array<double>").as("q"))
+    Centroids.nearest(q, "q", coarse, nprobe, "query_id", "q")
+      .select(col("query_id"),
+        explode(transform(col("near"), s => s.getField("id"))).as("cell"), col("q"))
   }
 
   /** Self-contained IVF-PQ ANN: train the coarse quantizer and the PQ

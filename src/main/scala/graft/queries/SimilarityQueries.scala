@@ -136,9 +136,9 @@ object SimilarityQueries {
       Similarity.knnJoin(emb.filter(col("label") === 0),
         emb.filter(col("label") =!= 0), k = 5)
     },
-    // realistic cell count: 64 cells exceeds Clustering.LiteralArgminMax
-    // (32), so BOTH the trainer and the probe run the broadcast-join
-    // assignment path end-to-end — the shape that scales to thousands
+    // realistic cell count: 64 cells exceeds the nearest-centroid
+    // kernel's literal cap (32, Centroids.nearest), so BOTH the trainer
+    // and the probe run its broadcast-join route end-to-end — the shape that scales to thousands
     // of IVF cells — under the full oracle compare, not just assertions
     "q_ann_ivf_topk_wide" -> { (s, dir) =>
       Similarity.ivfTopK(table(s, dir, "embeddings"), k = 5, nCells = 64,
@@ -576,11 +576,6 @@ object SimilarityQueries {
       |  JOIN batch eb ON b.vec_id = eb.vec_id
       |  JOIN corp ea ON a.vec_id = ea.vec_id)""".stripMargin
 
-  /** The engine's squared-distance expression, as SQL text: mirrors
-    * `Clustering.sqDistAlg` exactly — `greatest(xx − 2·(x·c) + cc, 0)`
-    * with the same left-to-right fold orders. `m` must expose (e, xx),
-    * `c` must expose (c, cc). `private[queries]` so the multimodal
-    * image-dedup oracle can replay the same trajectory at dim = 8. */
   /** Shared unrolled 2-round k-means|| CTE chain, parametrized by the
     * oversampling factor `l` (q_kmeanspar_* uses l=8 i.e. k=4; the
     * _wide twins use l=128 i.e. k=64 — the same replay, only the
@@ -766,6 +761,11 @@ object SimilarityQueries {
       |                       ORDER BY cos DESC, neighbor_id) AS rank
       |  FROM scored) WHERE rank <= $topK""".stripMargin
 
+  /** The engine's squared-distance expression, as SQL text: mirrors
+    * `Centroids.nearest`'s distance exactly — `greatest(xx − 2·(x·c) + cc, 0)`
+    * with the same left-to-right fold orders. `m` must expose (e, xx),
+    * `c` must expose (c, cc). `private[queries]` so the multimodal
+    * image-dedup oracle can replay the same trajectory at dim = 8. */
   private[queries] def d2Sql(m: String, c: String, dim: Int = 64): String =
     s"greatest($m.xx - 2 * list_sum(list_transform(range(1, ${dim + 1}), " +
       s"i -> $m.e[i] * $c.c[i])) + $c.cc, 0)"
@@ -1239,8 +1239,8 @@ object SimilarityQueries {
         |    row_number() OVER (PARTITION BY query_id
         |                       ORDER BY cos DESC, neighbor_id) AS rank
         |  FROM scored) WHERE rank <= 5""".stripMargin,
-    // same replay at 64 cells / nprobe 8 — oracles the >LiteralArgminMax
-    // broadcast-join assignment path (train + assign + probe)
+    // same replay at 64 cells / nprobe 8 — oracles the nearest-centroid
+    // kernel's broadcast-join route (train + assign + probe)
     "q_ann_ivf_topk_wide" ->
       s"""WITH emb0 AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
         |emb AS (SELECT vec_id, e,
@@ -1459,7 +1459,7 @@ object SimilarityQueries {
     // unrolled 2-round Lloyd trajectory: c0 = k lowest-id vectors,
     // a1 = assign, c1 = per-dim means, a2 = assign; centroids rounded
     // to 6 decimals at every step and distances via the same algebraic
-    // d² the engine computes (Clustering.sqDistAlg)
+    // d² the engine computes (Centroids.nearest)
     "q_kmeans_assign" ->
       s"""WITH emb0 AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),

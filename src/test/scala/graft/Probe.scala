@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.util.control.NonFatal
 
 import org.apache.spark.JobCount
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions.{col, lit}
@@ -29,9 +30,11 @@ import org.apache.spark.sql.functions.{col, lit}
   *    runs Spark jobs) and EXECUTION (the noop-sink materialization the
   *    bench times); the median of `--runs` runs (default 3), then each
   *    run's pair with the number of Spark jobs its construction started
-  *    (`[construct+execute Nj]`). A query whose time sits in
-  *    construction is bounded by the jobs it runs one after another, not
-  *    by the plan its explain shows.
+  *    and the number of classes Janino compiled in the whole run
+  *    (`[construct+execute Nj Kc]`, [[compiles]]). A query whose time
+  *    sits in construction is bounded by the jobs it runs one after
+  *    another, not by the plan its explain shows; a warm run that still
+  *    compiles is paying codegen, which its wall time hides.
   *  - `--plans dir`: writes `<dir>/<query>.txt` with the query's
   *    `explain("formatted")` before it runs, then its post-AQE executed
   *    plan after `collect()`, so the join strategies and exchange counts
@@ -158,20 +161,35 @@ object Probe {
       runs: Int, tag: String): Double = {
     val rows = (1 to runs).map { _ =>
       cleanup(spark)
-      val ((df, t0, t1), jobs) = JobCount.during(spark.sparkContext) {
-        val t0 = System.nanoTime()
-        (SparkEntry.queries(name)(spark, dir), t0, System.nanoTime())
+      val ((construct, execute, jobs), classes) = compiles {
+        val ((df, t0, t1), jobs) = JobCount.during(spark.sparkContext) {
+          val t0 = System.nanoTime()
+          (SparkEntry.queries(name)(spark, dir), t0, System.nanoTime())
+        }
+        val t2 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        val t3 = System.nanoTime()
+        ((t1 - t0) / 1e9, (t3 - t2) / 1e9, jobs)
       }
-      val t2 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val t3 = System.nanoTime()
-      ((t1 - t0) / 1e9, (t3 - t2) / 1e9, jobs)
+      (construct, execute, jobs, classes)
     }
     val c = median(rows.map(_._1))
     val e = median(rows.map(_._2))
     println(f"$tag$name%-40s construct=$c%7.3fs execute=$e%7.3fs  " +
-      rows.map { case (a, b, j) => f"[$a%.2f+$b%.2f ${j}j]" }.mkString(" "))
-    median(rows.map { case (a, b, _) => a + b })
+      rows.map { case (a, b, j, n) => f"[$a%.2f+$b%.2f ${j}j ${n}c]" }.mkString(" "))
+    median(rows.map { case (a, b, _, _) => a + b })
+  }
+
+  /** `body`'s result and the number of classes Janino compiled while it
+    * ran: the delta of Spark's codegen compile-time histogram count. The
+    * count is JVM-wide, so in local mode it includes the executors'
+    * compiles; a class already in Spark's codegen cache is not
+    * recompiled and does not count. */
+  private[graft] def compiles[A](body: => A): (A, Long) = {
+    val h = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = h.getCount
+    val out = body
+    (out, h.getCount - before)
   }
 
   private def dumpPlans(spark: SparkSession, name: String, dir: String,

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions.col
 
 /** `Probe.amplify`, the scaling probe's data multiplier: N copies of
   * every table but the single dimension tables, keys offset per copy so
-  * that key cardinality and every key join scale exactly N×. */
+  * that key cardinality and every key join scale exactly N×. And
+  * `Probe.compiles`, the per-run count of Janino compiles. */
 class ProbeSpec extends SparkSpec {
 
   private val tmp = java.nio.file.Files.createTempDirectory("probe-amp")
@@ -49,5 +50,17 @@ class ProbeSpec extends SparkSpec {
     assert(li1 > 0 && de1 > 0)
     assert(li2 === 2 * li1)
     assert(de2 === 2 * de1)
+  }
+
+  test("compiles: a new plan compiles classes, the same plan again compiles none") {
+    // the salt is inlined into the generated code, so no earlier test
+    // can have compiled this plan's classes
+    val salt = System.nanoTime()
+    def run() = spark.range(10).select((col("id") * salt).as("x")).collect()
+    val (rows, first) = Probe.compiles(run())
+    assert(rows.length === 10)
+    assert(first > 0L)
+    val (_, again) = Probe.compiles(run())
+    assert(again === 0L, "an identical plan must hit Spark's codegen cache")
   }
 }

@@ -4,8 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-14 invariants: the composed A/V curation pipeline's plan
   * budget, the k-means||-trained IVF's recall vs the lowest-id-init
-  * index, and the streaming-assign schema pin from the round's ADVICE
-  * fix. */
+  * index, order-n KN scoring and DoReMi's reweighting step. */
 class Round14Spec extends SparkSpec {
 
   test("q_curation_av: doc-keyed assembly adds no unbounded shuffles — " +
@@ -125,31 +124,5 @@ class Round14Spec extends SparkSpec {
     val b = run(docs.repartition(13))
     assert(a === b)
     assert(a.nonEmpty)
-  }
-
-  test("streaming assign: vec_id is LONG on BOTH sides of the literal " +
-      "cap, so a sink schema cannot change when k grows past 32") {
-    import org.apache.spark.sql.types._
-    // schema-only check: an unbounded source with INT ids on purpose —
-    // the plan (and its sink schema) builds without starting the query
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_assign_schema").toFile
-    tmp.deleteOnExit()
-    val stream = spark.readStream
-      .schema(new StructType().add("vec_id", IntegerType)
-        .add("embedding", ArrayType(DoubleType)))
-      .parquet(tmp.getAbsolutePath)
-    def schemaAt(k: Int): org.apache.spark.sql.types.StructType = {
-      val cents = (0 until k).map(i => (i, Seq(i.toDouble, 0.0)))
-      graft.streaming.StreamingOps.assignToCentroids(stream, cents).schema
-    }
-    val small = schemaAt(8)   // literal argmin path
-    val wide = schemaAt(40)   // closure path
-    // names + types (nullability legitimately differs between the
-    // expression and the tuple-encoded closure paths)
-    def sig(s: StructType) = s.map(f => (f.name, f.dataType))
-    assert(sig(small) === sig(wide),
-      s"schema flips across the literal cap:\n$small\nvs\n$wide")
-    assert(small("vec_id").dataType === LongType)
   }
 }

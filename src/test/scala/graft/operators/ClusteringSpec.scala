@@ -123,7 +123,7 @@ class ClusteringSpec extends SparkSpec {
     assert(plan.contains("Join"),
       s"wide init's weighting must score via the broadcast join:\n$plan")
     val got = weights.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size > Clustering.LiteralArgminMax,
+    assert(got.size > Centroids.LiteralArgminMax,
       s"expected > 32 weighted candidates, got ${got.size}")
     assert(got.values.sum === n, "nearest-point mass must partition the corpus")
     val again = Clustering.initKmeansParallel(base, k = 64, rounds = 2)

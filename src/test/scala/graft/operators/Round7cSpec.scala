@@ -199,29 +199,6 @@ class Round7cSpec extends SparkSpec {
     assert(wrote === assigned)
   }
 
-  // ---- filtered (hybrid) ANN ----
-
-  test("ivfTopK corpusFilter: every neighbor satisfies the predicate, " +
-      "queries still come from the full table; lit(true) == unfiltered") {
-    val emb = graft.sources.Sources.table(spark, sf0001, "embeddings")
-    val filtered = Similarity.ivfTopK(emb, k = 5,
-      corpusFilter = col("label") === 2).cache()
-    val label2 = emb.filter(col("label") === 2)
-      .select("vec_id").as[Long].collect().toSet
-    val neighbors = filtered.select("neighbor_id").as[Long].collect()
-    assert(neighbors.nonEmpty && neighbors.forall(label2.contains))
-    // at least one query is NOT in the filtered subset (hybrid shape:
-    // arbitrary query, restricted corpus)
-    val queries = filtered.select("query_id").distinct()
-      .as[Long].collect().toSet
-    assert(queries.exists(q => !label2.contains(q)))
-    // the default filter is the identity: same rows as the unfiltered op
-    val viaTrue = Similarity.ivfTopK(emb, k = 5, corpusFilter = lit(true))
-    val plain = Similarity.ivfTopK(emb, k = 5)
-    assert(viaTrue.except(plain).isEmpty && plain.except(viaTrue).isEmpty)
-    filtered.unpersist()
-  }
-
   // ---- stripHtml ----
 
   test("stripHtml: script/style CONTENT removed, tag text kept, " +

@@ -3,42 +3,10 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Round-7 wave: cross-table kNN join (eval-retrieval / RAG shape) and
-  * its relationship to the self-join IVF search. */
+/** Round-7 wave: hybrid lexical + dense retrieval (RRF fusion),
+  * Matryoshka truncation, blocklist stats and diversity selection. */
 class Round7dSpec extends SparkSpec {
   import spark.implicits._
-
-  // ---- knnJoin ----
-
-  test("knnJoin: neighbors only from the corpus side, every query row " +
-      "retrieves, exactly k results per query when the cells hold enough") {
-    val emb = graft.sources.Sources.table(spark, sf0001, "embeddings")
-    val queries = emb.filter(col("label") === 0)
-    val corpus = emb.filter(col("label") =!= 0)
-    val out = Similarity.knnJoin(queries, corpus, k = 5).cache()
-    val corpusIds = corpus.select("vec_id").as[Long].collect().toSet
-    val queryIds = queries.select("vec_id").as[Long].collect().toSet
-    val got = out.select("query_id", "neighbor_id").as[(Long, Long)].collect()
-    assert(got.nonEmpty)
-    assert(got.forall { case (q, n) => queryIds.contains(q) && corpusIds.contains(n) })
-    // every query with >= 1 probed non-empty cell returns <= k ranked rows
-    val perQuery = out.groupBy("query_id").agg(count(lit(1)).as("n"),
-      max(col("rank")).as("maxr"))
-      .as[(Long, Long, Int)].collect()
-    assert(perQuery.forall { case (_, n, maxr) => n <= 5 && maxr <= 5 && n == maxr })
-    out.unpersist()
-  }
-
-  test("knnJoin self-join special case: ivfTopK == knnJoinWithCentroids " +
-      "over the same trained cells with self-exclusion") {
-    val emb = graft.sources.Sources.table(spark, sf0001, "embeddings")
-    val cents = Clustering.trainCentroids(emb, 16, 2)
-    val viaIvf = Similarity.ivfTopKWithCentroids(emb, k = 5, cents)
-    val viaKnn = Similarity.knnJoinWithCentroids(
-      emb.filter(col("vec_id") % 50 === 0L), emb, k = 5, cents,
-      excludeSameId = true)
-    assert(viaIvf.except(viaKnn).isEmpty && viaKnn.except(viaIvf).isEmpty)
-  }
 
   // ---- rrfFuse / hybridTopK ----
 
@@ -239,13 +207,5 @@ class Round7dSpec extends SparkSpec {
       Curation.diversitySelect(emb, 0.4, nClusters = 1, maxCellRows = 10L)
     }
     assert(err.getMessage.contains("guard"))
-  }
-
-  test("knnJoin: empty corpus yields an empty, correctly-typed result") {
-    val emb = graft.sources.Sources.table(spark, sf0001, "embeddings")
-    val out = Similarity.knnJoin(emb.limit(3), emb.filter(lit(false)), k = 5)
-    assert(out.columns.toSeq ===
-      Seq("query_id", "neighbor_id", "rank", "cos"))
-    assert(out.count() === 0L)
   }
 }

@@ -112,23 +112,6 @@ class Round8Spec extends SparkSpec {
     assert(rows(1)._2 === 0.0 && rows(2)._2 === 0.0)
   }
 
-  // ---- knnJoinWithCentroids: broadcast query-batch guard ----
-
-  test("knnJoinWithCentroids: a query batch over maxQueryRows is " +
-      "refused with the shard guidance; batch-sized callers unaffected") {
-    val emb = graft.sources.Sources.table(spark, sf0001, "embeddings")
-    val cents = Clustering.trainCentroids(emb, 4, 1)
-    val err = intercept[IllegalArgumentException] {
-      Similarity.knnJoinWithCentroids(emb, emb, 3, cents,
-        maxQueryRows = 10L)
-    }
-    assert(err.getMessage.contains("Shard the query table"))
-    // a batch inside the bound behaves exactly as before
-    val ok = Similarity.knnJoinWithCentroids(
-      emb.filter(col("vec_id") < 20), emb, 3, cents)
-    assert(ok.count() > 0)
-  }
-
   // ---- diversitySelectAgainst: store/corpus sync contract ----
 
   test("diversitySelectAgainst: a stored selection missing from " +

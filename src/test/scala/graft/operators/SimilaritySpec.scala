@@ -243,20 +243,22 @@ class SimilaritySpec extends SparkSpec {
     val emb = Sources.table(spark, sf0001, "embeddings")
     val coarse = Clustering.trainCentroids(emb, 8, 2)
     val cbs = Similarity.pqCodebooks(emb, dim = 64)
-    def enc(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2).toList)).toSet
-    assert(
-      enc(Similarity.pqEncodeCellsLiteral(emb, cbs, coarse, 64,
-        "vec_id", "embedding")) ===
-      enc(Similarity.pqEncodeCellsJoin(emb, cbs, coarse, 64,
-        "vec_id", "embedding")))
+    // the same 8 cells scored on each of the kernel's two routes
+    def onRoute[A](join: Boolean)(f: => A): A =
+      Centroids.pinnedJoin.withValue(Some(join))(f)
+    def enc(join: Boolean) = onRoute(join) {
+      Similarity.pqEncodeWithCells(emb, cbs, coarse, 64).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2).toList)).toSet
+    }
+    assert(enc(join = false) === enc(join = true))
     val queries = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-    def probes(literal: Boolean) =
-      Similarity.pqProbeCells(queries, coarse, nprobe = 3, literal = literal)
+    def probes(join: Boolean) = onRoute(join) {
+      Similarity.pqProbeCells(queries, coarse, nprobe = 3)
         .select("query_id", "cell").collect()
         .map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(probes(literal = true) === probes(literal = false))
+    }
+    assert(probes(join = false) === probes(join = true))
   }
 
   test("pqIvfTopK probing every cell == exhaustive pqTopK; no codegen fallback") {
@@ -321,5 +323,110 @@ class SimilaritySpec extends SparkSpec {
     val out = Similarity.pqIvfTopK(emb, k = 5, dim = 64)
     assert(out.columns.toSeq === Seq("query_id", "neighbor_id", "rank", "adc_d2"))
     assert(out.count() === 0L)
+  }
+
+  test("knnJoin: neighbors only from the corpus side, every query row " +
+      "retrieves, exactly k results per query when the cells hold enough") {
+    val emb = graft.sources.Sources.table(spark, sf0001, "embeddings")
+    val queries = emb.filter(col("label") === 0)
+    val corpus = emb.filter(col("label") =!= 0)
+    val out = Similarity.knnJoin(queries, corpus, k = 5).cache()
+    val corpusIds = corpus.select("vec_id").as[Long].collect().toSet
+    val queryIds = queries.select("vec_id").as[Long].collect().toSet
+    val got = out.select("query_id", "neighbor_id").as[(Long, Long)].collect()
+    assert(got.nonEmpty)
+    assert(got.forall { case (q, n) => queryIds.contains(q) && corpusIds.contains(n) })
+    // every query with >= 1 probed non-empty cell returns <= k ranked rows
+    val perQuery = out.groupBy("query_id").agg(count(lit(1)).as("n"),
+      max(col("rank")).as("maxr"))
+      .as[(Long, Long, Int)].collect()
+    assert(perQuery.forall { case (_, n, maxr) => n <= 5 && maxr <= 5 && n == maxr })
+    out.unpersist()
+  }
+
+  test("knnJoin self-join special case: ivfTopK == knnJoinWithCentroids " +
+      "over the same trained cells with self-exclusion") {
+    val emb = graft.sources.Sources.table(spark, sf0001, "embeddings")
+    val cents = Clustering.trainCentroids(emb, 16, 2)
+    val viaIvf = Similarity.ivfTopKWithCentroids(emb, k = 5, cents)
+    val viaKnn = Similarity.knnJoinWithCentroids(
+      emb.filter(col("vec_id") % 50 === 0L), emb, k = 5, cents,
+      excludeSameId = true)
+    assert(viaIvf.except(viaKnn).isEmpty && viaKnn.except(viaIvf).isEmpty)
+  }
+
+  test("knnJoin: empty corpus yields an empty, correctly-typed result") {
+    val emb = graft.sources.Sources.table(spark, sf0001, "embeddings")
+    val out = Similarity.knnJoin(emb.limit(3), emb.filter(lit(false)), k = 5)
+    assert(out.columns.toSeq ===
+      Seq("query_id", "neighbor_id", "rank", "cos"))
+    assert(out.count() === 0L)
+  }
+
+  test("knnJoinWithCentroids: a query batch over maxQueryRows is " +
+      "refused with the shard guidance; batch-sized callers unaffected") {
+    val emb = graft.sources.Sources.table(spark, sf0001, "embeddings")
+    val cents = Clustering.trainCentroids(emb, 4, 1)
+    val err = intercept[IllegalArgumentException] {
+      Similarity.knnJoinWithCentroids(emb, emb, 3, cents,
+        maxQueryRows = 10L)
+    }
+    assert(err.getMessage.contains("Shard the query table"))
+    // a batch inside the bound behaves exactly as before
+    val ok = Similarity.knnJoinWithCentroids(
+      emb.filter(col("vec_id") < 20), emb, 3, cents)
+    assert(ok.count() > 0)
+  }
+
+  test("ivfTopK corpusFilter: every neighbor satisfies the predicate, " +
+      "queries still come from the full table; lit(true) == unfiltered") {
+    val emb = graft.sources.Sources.table(spark, sf0001, "embeddings")
+    val filtered = Similarity.ivfTopK(emb, k = 5,
+      corpusFilter = col("label") === 2).cache()
+    val label2 = emb.filter(col("label") === 2)
+      .select("vec_id").as[Long].collect().toSet
+    val neighbors = filtered.select("neighbor_id").as[Long].collect()
+    assert(neighbors.nonEmpty && neighbors.forall(label2.contains))
+    // at least one query is NOT in the filtered subset (hybrid shape:
+    // arbitrary query, restricted corpus)
+    val queries = filtered.select("query_id").distinct()
+      .as[Long].collect().toSet
+    assert(queries.exists(q => !label2.contains(q)))
+    // the default filter is the identity: same rows as the unfiltered op
+    val viaTrue = Similarity.ivfTopK(emb, k = 5, corpusFilter = lit(true))
+    val plain = Similarity.ivfTopK(emb, k = 5)
+    assert(viaTrue.except(plain).isEmpty && plain.except(viaTrue).isEmpty)
+    filtered.unpersist()
+  }
+
+  // an nprobe of 0 would slice an empty probe list and return no
+  // neighbours: the nearest-centroid kernel refuses m < 1 at plan build
+
+  test("ivfTopK: nprobe = 0 is refused, not an empty result") {
+    val err = intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(emb, k = 5, nCells = 4, nprobe = 0)
+    }
+    assert(err.getMessage.contains("nprobe"))
+  }
+
+  test("knnJoinWithCentroids: nprobe = 0 is refused, not an empty result") {
+    val cents = Clustering.trainCentroids(emb, 4, 1)
+    val err = intercept[IllegalArgumentException] {
+      Similarity.knnJoinWithCentroids(emb.filter(col("vec_id") < 20), emb, 3,
+        cents, nprobe = 0)
+    }
+    assert(err.getMessage.contains("nprobe"))
+  }
+
+  test("pqAdcTopKCells: nprobe = 0 is refused, not an empty result") {
+    val coarse = Clustering.trainCentroids(emb, 4, 1)
+    val cbs = Similarity.pqCodebooks(emb, dim = 64, trainIters = 1)
+    val codes = Similarity.pqEncodeWithCells(emb, cbs, coarse, 64)
+    val queries = emb.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q"))
+    val err = intercept[IllegalArgumentException] {
+      Similarity.pqAdcTopKCells(codes, queries, cbs, coarse, 64, k = 5, nprobe = 0)
+    }
+    assert(err.getMessage.contains("nprobe"))
   }
 }

@@ -128,7 +128,7 @@ class EngineSweepSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "q_dsir_resample",            // same totals feeding the top-k
     "q_temporal_split",           // broadcast 1-row quantile cutoff
     // broadcast k-row centroid table: the >32-cell assignment path
-    // (Clustering.LiteralArgminMax scaladoc) — bounded by nCells
+    // (Centroids.nearest's join route) — bounded by nCells
     "q_ann_ivf_topk_wide",
     // exact all-pairs ORACLE BASELINES — documented as such; the
     // scale paths are the LSH/IVF variants (SCALE.md "Known tradeoffs")
@@ -184,7 +184,7 @@ class EngineSweepSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // round-13: k-means|| above the 32-literal codegen cap scores
     // via a broadcast of the BOUNDED candidate table (O(l·rounds)
     // rows, corpus-independent) + min(struct) aggregation — the
-    // documented join formulation at Clustering.LiteralArgminMax;
+    // documented join route of Centroids.nearest;
     // the "cross" join is row × bounded-candidates, never row × row
     "q_kmeanspar_init_wide", "q_kmeanspar_assign_wide")
 
