@@ -14,12 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Partitioning {
 
-  /** Explicit co-partitioning by key: one hash shuffle now, reused by
-    * every downstream key-wise op (Catalyst sees the partitioning and
-    * elides its own exchanges). */
-  def byKey(df: DataFrame, numPartitions: Int, keys: Column*): DataFrame =
-    df.repartition(numPartitions, keys: _*)
-
   /** Custom RDD partitioner: hash partitioning with an explicit
     * hot-key override — each listed hot key gets a RESERVED partition,
     * everything else hashes over the remainder. The RDD-level

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 /** Word count — the reference's one executable specification
   * (`example.py:22-29`: whitespace tokenization, case- and
@@ -30,9 +30,4 @@ object WordCount {
       (_, line) => tokens(line).map(w => (w, 1L)),
       _ + _)
   }
-
-  /** End-to-end: text file → top-k `(word, count)`, the full reference
-    * pipeline (`example.py:39-45`) minus its `[1:25]` off-by-one. */
-  def topWords(spark: SparkSession, path: String, k: Int): Array[(String, Long)] =
-    MapReduce.topK(counts(graft.sources.Sources.textWithIndex(spark, path)), k)
 }

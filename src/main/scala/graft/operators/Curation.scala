@@ -46,9 +46,9 @@ object Curation {
     // rounds pay two distincts + a signature action + an except
     // confirm each, 1.7-2.9x slower fresh-JVM on these diameter-1-2
     // near-dup graphs; propagation's long-session degradation was the
-    // superseded-checkpoint leak, fixed at the source by
-    // graft.core.Checkpoints.free. Alternating stays the right call
-    // for DEEP topologies — q_dedup_clusters_logstar pins it.)
+    // superseded-checkpoint leak, fixed at the source by the round
+    // driver in graft.core.Checkpoints. Alternating stays the right
+    // call for DEEP topologies — q_dedup_clusters_logstar pins it.)
     val clusters = Dedup.connectedComponents(
       quality.select(col("doc_id").as("id")), pairs, maxIters)
     val survivors = quality

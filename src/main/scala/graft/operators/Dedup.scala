@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -831,26 +832,15 @@ object Dedup {
     * O(component diameter) rounds — near-dup clusters are shallow, and
     * `maxIters` bounds the worst case. Each round is one join + one
     * aggregation, all distributed; convergence is checked with a count
-    * action on changed labels. Results are cached per round and
-    * unpersisted after — at 100 TB this is the standard large-star
-    * shape (cf. Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14).
+    * action on changed labels. The rounds run on
+    * [[graft.core.Checkpoints.fixpoint]] (its scaladoc states the round
+    * contract), with the cached edge list as the loop constant.
     *
     * If `maxIters` is exhausted before convergence (a component with
     * diameter > maxIters), the labels are PARTIAL — over-segmented
     * clusters. That is a correctness hazard for callers, so it throws
     * rather than returning silently-wrong labels; raise `maxIters` for
     * deep graphs (near-dup clusters are shallow, diameter 1-2).
-    *
-    * Labels are `localCheckpoint`ed (not just cached) each round: a
-    * cached iterative DataFrame still re-analyzes its ever-deepening
-    * logical plan every round, so per-iteration planning cost GROWS
-    * with iteration count — checkpointing flattens the plan to the
-    * materialized blocks (measured 4x faster on the label loop). The
-    * trade-off is truncated lineage: an executor loss mid-loop fails
-    * the job instead of recomputing (acceptable for a short loop; a
-    * long-lived production loop would use reliable `checkpoint` to a
-    * cluster store every few rounds instead).
     */
   def connectedComponents(allIds: DataFrame, pairs: DataFrame,
       maxIters: Int = 20): DataFrame = {
@@ -862,10 +852,9 @@ object Dedup {
     // are sparse relative to the corpus), and isolated nodes are their
     // own trivial component. They rejoin via one left join at the end,
     // so per-iteration work is O(|edge endpoints|), not O(|corpus|).
-    var labels = edges.select(col("src").as("id")).distinct()
+    val nodes = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"),
         lit(false).as("__changed"))
-      .localCheckpoint(true)
     // Every edge node has >= 1 neighbor, so neighborMin covers all of
     // `ls` and the join is inner; the changed flag is computed in the
     // same pass (no separate old-vs-new compare join per iteration).
@@ -879,39 +868,24 @@ object Dedup {
           least(col("label"), col("nbr_label")).as("label"),
           (col("nbr_label") < col("label")).as("__changed"))
     }
-    var iter = 0
-    var converged = false
-    var lastChanged = 0L
-    while (iter < maxIters && !converged) {
-      // single-step propagation per checkpoint + convergence check.
-      // (A two-step variant — propagate twice, check once — was tried
-      // and REVERTED: the un-checkpointed intermediate is consumed by
-      // two operators in the outer step, and under AQE the duplicated
-      // subtree does not reliably hit exchange reuse, producing
-      // heavy-tailed reruns of the whole pair plan. Near-dup graphs
-      // converge in 2-3 rounds; the saved count action isn't worth the
-      // tail.)
-      val next = propagate(labels).localCheckpoint(true)
-      val changed = next.filter(col("__changed")).count()
-      // `next` is fully materialized (eager checkpoint + the count
-      // action), so the previous round's blocks are dead — free them
-      // NOW instead of leaving them for the ContextCleaner: in a
-      // long-lived session the superseded rounds otherwise accumulate
-      // and their eviction/GC churn lands on this very loop
-      // (graft.core.Checkpoints scaladoc has the measured signature).
-      graft.core.Checkpoints.free(labels)
-      labels = next
-      lastChanged = changed
-      converged = changed == 0L
-      iter += 1
-    }
-    edges.unpersist()
-    if (!converged) {
-      throw new IllegalStateException(
+    // single-step propagation per checkpoint + convergence check.
+    // (A two-step variant — propagate twice, check once — was tried
+    // and REVERTED: the un-checkpointed intermediate is consumed by
+    // two operators in the outer step, and under AQE the duplicated
+    // subtree does not reliably hit exchange reuse, producing
+    // heavy-tailed reruns of the whole pair plan. Near-dup graphs
+    // converge in 2-3 rounds; the saved count action isn't worth the
+    // tail.)
+    val labels = Checkpoints.fixpoint[Long](nodes, maxIters, edges)(propagate)(
+      start = _ => (0L, false), // every initial label is unchanged
+      test = { (_, _, next) =>
+        val changed = next.filter(col("__changed")).count()
+        (changed, changed == 0L)
+      },
+      notConverged = changed =>
         s"connectedComponents did not converge in $maxIters iterations " +
-        s"($lastChanged labels still changing) — partial labels would " +
+        s"($changed labels still changing) — partial labels would " +
         "over-segment clusters; raise maxIters for deep components")
-    }
     allIds.select(col("id"))
       .join(labels.select(col("id"), col("label")), Seq("id"), "left_outer")
       .select(col("id").as("doc_id"),

@@ -1,13 +1,14 @@
 package graft.operators
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Iterative graph analytics over edge DataFrames — the second consumer
-  * (after [[Dedup.connectedComponents]]) of the checkpoint-per-round
-  * iteration pattern: `localCheckpoint(eager=true)` between rounds so
-  * the logical plan stays flat instead of re-analyzing an ever-deeper
-  * tree (see SCALE.md, "Iterative loops").
+/** Iterative graph analytics over edge DataFrames. The loops here, like
+  * [[Dedup.connectedComponents]], run on [[graft.core.Checkpoints]]'
+  * round driver: each gives its step, its convergence statistic and its
+  * error text, and the driver's round contract decides how a round is
+  * materialized, tested and released.
   *
   * In a training-data pipeline this is the importance-propagation step:
   * rank pages over a hyperlink graph to weight a web corpus, or score
@@ -43,36 +44,19 @@ object Graph {
     val outDeg = e.groupBy(col("src").as("id"))
       .agg(sum(col("w")).as("out_deg"))
       .localCheckpoint(true)
-    var ranks = nodes.select(col("id"), lit(1.0).as("rank"))
-      .localCheckpoint(true)
-    // Checkpoint EVERY round: `ranks` is consumed by two operators in
-    // the next round (the contribs join and the nodes join), so an
-    // un-checkpointed round embeds its plan twice in the next one —
-    // exponential plan growth within any multi-round checkpoint window,
-    // and under AQE the duplicated subtrees don't reliably hit exchange
-    // reuse (measured heavy-tailed reruns on the connected-components
-    // loop with the same shape; see Dedup.connectedComponents).
-    for (_ <- 1 to iters) {
+    Checkpoints.iterate(nodes.select(col("id"), lit(1.0).as("rank")), iters,
+        e, nodes, outDeg) { ranks =>
       val contribs = e
         .join(ranks.join(outDeg, Seq("id"))
           .select(col("id").as("src"), (col("rank") / col("out_deg")).as("r")),
           Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(sum(col("w") * col("r")).as("in_sum"))
-      val next = nodes.join(contribs, Seq("id"), "left_outer")
+      nodes.join(contribs, Seq("id"), "left_outer")
         .select(col("id"),
           (lit(1.0 - damping) +
             lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-        .localCheckpoint(true)
-      // the eager checkpoint fully materialized `next`, so round N-1's
-      // blocks are dead — free them now (Checkpoints scaladoc)
-      graft.core.Checkpoints.free(ranks)
-      ranks = next
     }
-    // the returned frame is the final round's flat checkpoint — the
-    // loop-constant inputs no longer feed any live plan
-    graft.core.Checkpoints.free(e, nodes, outDeg)
-    ranks
   }
 
   /** Synchronous label-propagation communities (Raghavan et al. 2007)
@@ -97,11 +81,9 @@ object Graph {
     *
     * Scale shape per round: one equi-join of the symmetrized edge list
     * against the label table + two keyed aggregations (neighbor-label
-    * counts, per-node argmax via one min(struct) — no window); rounds
-    * are localCheckpoint-separated like every iterative loop here
-    * (SCALE.md "Iterative loops"). Edges compress to distinct pairs
-    * once, so a round costs |E| join rows regardless of raw
-    * multiplicity. */
+    * counts, per-node argmax via one min(struct) — no window). Edges
+    * compress to distinct pairs once, so a round costs |E| join rows
+    * regardless of raw multiplicity. */
   def labelPropagation(rawEdges: DataFrame, rounds: Int): DataFrame = {
     require(rounds > 0)
     val und = rawEdges
@@ -112,9 +94,8 @@ object Graph {
       .union(und.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint(true)
     val nodes = sym.select(col("a").as("id")).distinct().localCheckpoint(true)
-    var labels = nodes.select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
+    Checkpoints.iterate(nodes.select(col("id"), col("id").as("label")),
+        rounds, sym, nodes) { labels =>
       val counts = sym
         .join(labels.select(col("id").as("b"), col("label")), Seq("b"))
         .groupBy(col("a").as("id"), col("label"))
@@ -125,14 +106,9 @@ object Graph {
         .groupBy(col("id"))
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("m"))
         .select(col("id"), col("m.l").as("best"))
-      val next = nodes.join(best, Seq("id"), "left_outer")
+      nodes.join(best, Seq("id"), "left_outer")
         .select(col("id"), coalesce(col("best"), col("id")).as("label"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.free(labels) // superseded round (see Checkpoints)
-      labels = next
     }
-    graft.core.Checkpoints.free(sym, nodes) // loop-constant inputs, now dead
-    labels
   }
 
   /** Exact triangle count + global clustering coefficient over an
@@ -199,47 +175,35 @@ object Graph {
     *
     * Each round is one degree aggregation + one semi-join back onto
     * the edge list, both keyed — per-round cost is O(|surviving
-    * edges|), monotonically shrinking. `localCheckpoint` per round
-    * keeps the plan flat (the [[pageRank]] / connectedComponents
-    * iteration pattern); the per-round `count()` driver action reads
-    * one aggregate row, not data. Worst-case round count is large on
-    * pathological chains (a path graph peels 2 nodes/round), so the
-    * loop throws at `maxRounds` rather than spin — real web/similarity
-    * graphs converge in a handful of rounds because peeling cascades.
+    * edges|), monotonically shrinking; the per-round `count()` driver
+    * action reads one aggregate row, not data. Worst-case round count
+    * is large on pathological chains (a path graph peels 2
+    * nodes/round), so the loop throws at `maxRounds` rather than spin —
+    * real web/similarity graphs converge in a handful of rounds because
+    * peeling cascades.
     *
     * Returns surviving nodes with their degree inside the core
     * (≥ k by construction). */
   def kCore(rawEdges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    var e = rawEdges
+    val edges = rawEdges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint(true)
-    var nEdges = e.count()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
+    val core = Checkpoints.fixpoint[Long](edges, maxRounds) { e =>
       val deg = e.select(col("a").as("v"))
         .union(e.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select("v")
-      val next = e.join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
+      e.join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
         .select("a", "b")
-        .localCheckpoint(true)
-      graft.core.Checkpoints.free(e) // superseded round (see Checkpoints)
-      e = next
-      val n = e.count()
-      converged = n == nEdges
-      nEdges = n
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"kCore(k=$k) did not converge in $maxRounds rounds")
-    e.select(col("a").as("v")).union(e.select(col("b").as("v")))
+    }(
+      start = e => (e.count(), false),
+      test = { (_, before, next) => val n = next.count(); (n, n == before) },
+      notConverged = _ => s"kCore(k=$k) did not converge in $maxRounds rounds")
+    core.select(col("a").as("v")).union(core.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("core_deg"))
   }
 
@@ -250,18 +214,17 @@ object Graph {
     * O(diameter) rounds: a CHAIN of progressively-edited near-dups
     * (d₁~d₂~…~dₙ, each adjacent pair similar but distant pairs not)
     * has diameter n, and propagation walks it one hop per round while
-    * the star operations collapse it geometrically (Round7Spec pins a
+    * the star operations collapse it geometrically (GraphSpec pins a
     * 300-link chain: propagation refuses at maxIters=20, this
     * converges in ≤ 25 rounds).
     *
     * Per round: large-star hangs every neighbor LARGER than u onto
     * u's neighborhood minimum; small-star re-hangs the smaller
     * neighbors. Each is one edge-keyed aggregation plus a join —
-    * distributed, no driver state; rounds are `localCheckpoint`ed and
-    * convergence is detected by an order-independent edge-set
-    * signature (count + bit_xor of pair hashes — one tiny action per
-    * round, no except/join). Output contract matches
-    * [[Dedup.connectedComponents]]: `(doc_id, cluster_rep)` with
+    * distributed, no driver state; convergence is detected by an
+    * order-independent edge-set signature (count + bit_xor of pair
+    * hashes — one tiny action per round, no except/join). Output
+    * contract matches [[Dedup.connectedComponents]]: `(doc_id, cluster_rep)` with
     * cluster_rep = component minimum; isolated ids are their own rep. */
   def connectedComponentsAlternating(allIds: DataFrame, pairs: DataFrame,
       maxRounds: Int = 25): DataFrame = {
@@ -297,17 +260,14 @@ object Graph {
         .where(col("src") =!= col("dst"))
         .distinct()
     }
-    var edges = pairs
+    val pairEdges = pairs
       .select(col("a").cast("long").as("src"), col("b").cast("long").as("dst"))
       .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
-    var prevSig = canonSig(edges)
-    var round = 0
-    var converged = edges.isEmpty
-    while (round < maxRounds && !converged) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
-      val sig = canonSig(next)
-      if (sig == prevSig) {
+    val edges = Checkpoints.fixpoint[(Long, Long)](pairEdges, maxRounds)(
+        e => smallStar(largeStar(e)))(
+      start = e => (canonSig(e), e.isEmpty),
+      test = { (prev, prevSig, next) =>
+        val sig = canonSig(next)
         // The (count, bit_xor(xxhash64)) signature is necessary but a
         // ~2^-64 collision between successive NON-equal edge sets would
         // otherwise terminate early with silently wrong labels. Confirm
@@ -315,17 +275,10 @@ object Graph {
         // round): counts already match via the signature, so
         // one-directional except() emptiness implies equality on these
         // distinct canonical sets. A failed confirm just keeps looping.
-        converged = canonEdges(next).except(canonEdges(edges)).isEmpty
-      }
-      prevSig = sig
-      // freed only AFTER the confirm action above — it reads the old
-      // round's blocks (see Checkpoints' contract)
-      graft.core.Checkpoints.free(edges)
-      edges = next
-      round += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
+        (sig, sig == prevSig &&
+          canonEdges(next).except(canonEdges(prev)).isEmpty)
+      },
+      notConverged = _ =>
         s"connectedComponentsAlternating did not converge in $maxRounds " +
         "rounds — raise maxRounds (expected O(log n))")
     val labels = edges

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.sources.Sources
+import org.apache.spark.sql.GraftCacheProbe
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -96,10 +97,24 @@ class DedupSpec extends SparkSpec {
     // a 6-node path has diameter 5: maxIters=2 cannot converge, and
     // silently-partial labels would over-segment the cluster
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("a", "b")
+    val cachedBefore = GraftCacheProbe.describe(spark)
     val e = intercept[IllegalStateException] {
       Dedup.connectedComponents(ids, path, maxIters = 2).collect()
     }
     assert(e.getMessage.contains("did not converge"))
+    // the throw must not leave the loop's cached edge list registered,
+    // nor may a job that fails inside the loop (here: building the
+    // cached edges under the initial round's checkpoint)
+    assert(GraftCacheProbe.describe(spark) === cachedBefore)
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val failing = spark.range(1L, 6L).select(col("id").as("a"),
+      when(col("id") === 3L, raise_error(lit("boom")))
+        .otherwise(col("id") + 1L).as("b"))
+    val failed = intercept[Exception] {
+      Dedup.connectedComponents(ids, failing).collect()
+    }
+    assert(String.valueOf(failed.getMessage).contains("boom"), failed)
+    assert(GraftCacheProbe.describe(spark) === cachedBefore)
     // with enough iterations the same graph converges to one component
     val ok = Dedup.connectedComponents(ids, path, maxIters = 10)
       .collect().map(r => r.getLong(1)).toSet

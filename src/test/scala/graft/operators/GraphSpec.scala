@@ -109,4 +109,86 @@ class GraphSpec extends SparkSpec {
     assert(a("p") === "q" && a("q") === "p", a.toString)
     assert(a("x") === "y" && a("y") === "x", a.toString)
   }
+
+  // ---- Graph.kCore ----
+
+  private def core(edges: Seq[(String, String)], k: Int) =
+    Graph.kCore(edges.toDF("src", "dst"), k)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("kCore: K4 is its own 3-core; adding a pendant changes nothing") {
+    val k4 = Seq(("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
+      ("c", "d"))
+    val want = Map("a" -> 3L, "b" -> 3L, "c" -> 3L, "d" -> 3L)
+    assert(core(k4, 3) === want)
+    assert(core(k4 :+ ("d", "e"), 3) === want) // pendant e peels off
+  }
+
+  test("kCore: star graph has no 2-core; cycle is entirely its own 2-core") {
+    val star = Seq(("hub", "a"), ("hub", "b"), ("hub", "c"), ("hub", "d"))
+    assert(core(star, 2) === Map.empty)
+    val cycle = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"))
+    assert(core(cycle, 2) ===
+      Map("a" -> 2L, "b" -> 2L, "c" -> 2L, "d" -> 2L))
+  }
+
+  test("kCore: cascading peel — chain hung off a triangle needs multiple rounds") {
+    // x1-x2-x3 chain into triangle a,b,c: peeling x3 exposes x2, etc.
+    val g = Seq(("a", "b"), ("b", "c"), ("c", "a"),
+      ("a", "x1"), ("x1", "x2"), ("x2", "x3"))
+    assert(core(g, 2) === Map("a" -> 2L, "b" -> 2L, "c" -> 2L))
+  }
+
+  test("kCore: exhausting maxRounds throws instead of returning an " +
+      "unpeeled core, and frees its rounds") {
+    // a 10-node path peels its two end nodes per round: 2 rounds leave
+    // 5 of its 9 edges, so the peel is still moving when rounds run out
+    val path = (1 to 9).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "dst")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalStateException] {
+      Graph.kCore(path, k = 2, maxRounds = 2)
+    }
+    assert(e.getMessage.contains("did not converge"), e.getMessage)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"rounds left persisted after the throw: $left")
+  }
+
+  // ---- Graph.connectedComponentsAlternating ----
+
+  private def ccPairs(edges: (Long, Long)*) = edges.toDF("a", "b")
+  private def ccIds(n: Long) = (0L until n).toDF("id")
+
+  test("alternating CC == label propagation on a mixed graph") {
+    // two triangles + a bridge + a 4-chain + isolated nodes
+    val pairs = ccPairs((0L, 1L), (1L, 2L), (2L, 0L), (5L, 6L), (6L, 7L),
+      (7L, 5L), (2L, 5L), (10L, 11L), (11L, 12L), (12L, 13L))
+    val ids = ccIds(16L)
+    val alt = Graph.connectedComponentsAlternating(ids, pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val prop = Dedup.connectedComponents(ids, pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(alt === prop)
+    assert(alt(7L) === 0L && alt(13L) === 10L && alt(15L) === 15L)
+  }
+
+  test("alternating CC collapses a 300-link chain where propagation stalls") {
+    val chain = ccPairs((0L until 300L).map(i => (i, i + 1)): _*)
+    val ids = ccIds(301L)
+    // min-label propagation moves the root one hop per round: refuses
+    // at its default 20-round budget on diameter 300
+    intercept[IllegalStateException] {
+      Dedup.connectedComponents(ids, chain).collect()
+    }
+    // the star rounds collapse it geometrically within the default 25
+    val alt = Graph.connectedComponentsAlternating(ids, chain)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(alt.size === 301 && alt.values.forall(_ === 0L))
+  }
+
+  test("alternating CC: no edges — every id is its own component") {
+    val out = Graph.connectedComponentsAlternating(
+      ccIds(5L), Seq.empty[(Long, Long)].toDF("a", "b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out === (0L until 5L).map(i => i -> i).toMap)
+  }
 }

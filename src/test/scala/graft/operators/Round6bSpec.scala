@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Round-6 second wave: mergeable aggregate states, snapshot diff,
-  * interval union, temporal split, the Gopher filter battery, k-core,
-  * and the pre-flight join sizer. */
+  * interval union, temporal split, the Gopher filter battery and the
+  * pre-flight join sizer. */
 class Round6bSpec extends SparkSpec {
   import spark.implicits._
 
@@ -135,35 +135,6 @@ class Round6bSpec extends SparkSpec {
     val out = TextAnalysis.gopherQualityFilter(docs, "doc_id", "text")
       .select("doc_id", "n_words", "keep").collect()
     assert(out.forall(r => r.getLong(1) === 0L && r.getInt(2) === 0))
-  }
-
-  // ---- Graph.kCore ----
-
-  private def core(edges: Seq[(String, String)], k: Int) =
-    Graph.kCore(edges.toDF("src", "dst"), k)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  test("kCore: K4 is its own 3-core; adding a pendant changes nothing") {
-    val k4 = Seq(("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
-      ("c", "d"))
-    val want = Map("a" -> 3L, "b" -> 3L, "c" -> 3L, "d" -> 3L)
-    assert(core(k4, 3) === want)
-    assert(core(k4 :+ ("d", "e"), 3) === want) // pendant e peels off
-  }
-
-  test("kCore: star graph has no 2-core; cycle is entirely its own 2-core") {
-    val star = Seq(("hub", "a"), ("hub", "b"), ("hub", "c"), ("hub", "d"))
-    assert(core(star, 2) === Map.empty)
-    val cycle = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"))
-    assert(core(cycle, 2) ===
-      Map("a" -> 2L, "b" -> 2L, "c" -> 2L, "d" -> 2L))
-  }
-
-  test("kCore: cascading peel — chain hung off a triangle needs multiple rounds") {
-    // x1-x2-x3 chain into triangle a,b,c: peeling x3 exposes x2, etc.
-    val g = Seq(("a", "b"), ("b", "c"), ("c", "a"),
-      ("a", "x1"), ("x1", "x2"), ("x2", "x3"))
-    assert(core(g, 2) === Map("a" -> 2L, "b" -> 2L, "c" -> 2L))
   }
 
   // ---- Stats.joinSizeEstimate ----

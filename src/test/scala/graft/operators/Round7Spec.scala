@@ -187,45 +187,6 @@ class Round7Spec extends SparkSpec {
     assert(out(1).getAs[String]("text_dedup") === "abcdefghi")
   }
 
-  // ---- Graph.connectedComponentsAlternating ----
-
-  private def ccPairs(edges: (Long, Long)*) = edges.toDF("a", "b")
-  private def ccIds(n: Long) = (0L until n).toDF("id")
-
-  test("alternating CC == label propagation on a mixed graph") {
-    // two triangles + a bridge + a 4-chain + isolated nodes
-    val pairs = ccPairs((0L, 1L), (1L, 2L), (2L, 0L), (5L, 6L), (6L, 7L),
-      (7L, 5L), (2L, 5L), (10L, 11L), (11L, 12L), (12L, 13L))
-    val ids = ccIds(16L)
-    val alt = Graph.connectedComponentsAlternating(ids, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = Dedup.connectedComponents(ids, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(alt === prop)
-    assert(alt(7L) === 0L && alt(13L) === 10L && alt(15L) === 15L)
-  }
-
-  test("alternating CC collapses a 300-link chain where propagation stalls") {
-    val chain = ccPairs((0L until 300L).map(i => (i, i + 1)): _*)
-    val ids = ccIds(301L)
-    // min-label propagation moves the root one hop per round: refuses
-    // at its default 20-round budget on diameter 300
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(ids, chain).collect()
-    }
-    // the star rounds collapse it geometrically within the default 25
-    val alt = Graph.connectedComponentsAlternating(ids, chain)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(alt.size === 301 && alt.values.forall(_ === 0L))
-  }
-
-  test("alternating CC: no edges — every id is its own component") {
-    val out = Graph.connectedComponentsAlternating(
-      ccIds(5L), Seq.empty[(Long, Long)].toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out === (0L until 5L).map(i => i -> i).toMap)
-  }
-
   // ---- persisted index lifecycles (winnow, line-hash) ----
 
   test("winnow index lifecycle: appended batch == from-scratch rebuild") {
